@@ -31,20 +31,30 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** The SPARK_GRAFT_BENCH_ONLY list: comma-separated query names. A
+    * name that is not a `SparkEntry.queries` key fails the run before
+    * any session starts (a typo must not silently time nothing). */
+  private[graft] def onlyQueries(list: String): Set[String] = {
+    val names = list.split(",").map(_.trim).toSet
+    val unknown = names -- SparkEntry.queries.keySet
+    require(unknown.isEmpty, "SPARK_GRAFT_BENCH_ONLY names unknown " +
+      s"queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    names
+  }
+
   def main(args: Array[String]): Unit = {
     val startedAt = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // iteration aid (mirrors Verify's SPARK_GRAFT_ONLY): restrict the
+    // sweep to named queries — A/B timing of a suspect query without
+    // paying the full sweep + headline
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(onlyQueries)
 
     // ---- per-query sweep at local[cpus] ------------------------------
     var spark = session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     spark.read.parquet(s"$sfDir/documents.parquet").count() // JIT/IO warmup
-    // iteration aid (mirrors Verify's SPARK_GRAFT_ONLY): restrict the
-    // sweep to named queries — A/B timing of a suspect query without
-    // paying the full sweep + headline
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(q => only.forall(_.contains(q._1))).map { case (name, fn) =>
       val dt = try time(fn(spark, sfDir)) catch { case _: Throwable => -1.0 }

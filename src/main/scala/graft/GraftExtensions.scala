@@ -18,16 +18,5 @@ import org.apache.spark.sql.SparkSessionExtensions
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     graft.functions.injectAll(ext)
-    // deferred count-gated broadcast for the ANN top-k paths: the rule
-    // resolves BroadcastGate markers at optimization (= action) time.
-    // register() also attaches it via experimental.extraOptimizations —
-    // the probe Ann.gatedBroadcast uses — so extension-built sessions
-    // take the deferred path too; the preCBO copy then no-ops (markers
-    // already consumed) and is kept as the first-resolution point.
-    ext.injectPreCBORule { s =>
-      org.apache.spark.sql.graft.GatePlans.register(s)
-      org.apache.spark.sql.graft.ResolveBroadcastGate(
-        s.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
-    }
   }
 }

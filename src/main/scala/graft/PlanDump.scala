@@ -4,8 +4,8 @@ import java.nio.file.{Files, Paths}
 
 /** Write `.explain("formatted")` of named queries to files (round-6
   * optimization evidence: plans/r06/<query>_<tag>.txt). Uses the SAME
-  * session construction as Bench (Sessions.local — graft optimizer
-  * rules registered), so the dumped plan is the one the bench runs.
+  * session construction as Bench (Sessions.local), so the dumped plan
+  * is the one the bench runs.
   *
   * Usage: runMain graft.PlanDump <outDir> <tag> [q_a,q_b,...]
   * (no query list = all of SparkEntry.queries).

@@ -135,8 +135,9 @@ object ScalingDedup {
       // iso-configuration minhash linearity: the DEFAULT config above
       // crosses two scale-adaptive gates between the probe's two sizes
       // (at 200k docs the 40k candidates verify set-based over a
-      // broadcast; at 800k docs the measured shingle bytes exceed
-      // SetVerifyBroadcastBytes and the set joins run shuffled), so its
+      // broadcast; at 800k docs the measured set relation exceeds
+      // spark.sql.autoBroadcastJoinThreshold and the set joins run
+      // shuffled), so its
       // wall ratio measures the POLICY seam, not the machinery's
       // growth. Forcing the pair-join verify on both legs
       // (setVerifyLimit = 0) keeps one plan shape at both sizes — the

@@ -24,11 +24,7 @@ object Sessions {
   def local(cores: Int): SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = builder(s"local[$cores]", cores).getOrCreate()
-    // deferred count-gated broadcast (Ann top-k paths): plan assembly
-    // stays job-free, the gate count runs at action time
-    org.apache.spark.sql.graft.GatePlans.register(s)
-    s
+    builder(s"local[$cores]", cores).getOrCreate()
   }
 
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =

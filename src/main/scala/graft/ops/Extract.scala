@@ -15,7 +15,9 @@ import graft.functions._
  * Out-of-raster points disappear via the inner join (the ValueError
  * skip, extract.py:193-198); fully-masked rows drop via the sentinel
  * re-detection filter (extract.py:205-207). The points side is small
- * (labeled training points) and broadcast.
+ * (labeled training points): the planner broadcasts it when its
+ * estimated size fits `spark.sql.autoBroadcastJoinThreshold`, and a
+ * point set over that budget joins shuffled.
  */
 object Extract {
 
@@ -24,18 +26,6 @@ object Extract {
   def pointsWithCells(points: DataFrame, res: Int): DataFrame =
     points.withColumn("cell", cell_of(col("lon"), col("lat"), res))
 
-  /** Byte bound for forcing the points-side broadcast (VERDICT r5
-    * wrong #3: the hint was unconditional — "points are small by
-    * contract" holds for labeled training points, but a 10^8-point
-    * probe relation would OOM the driver here first while every other
-    * broadcast in the engine is gated). The gate reads the optimizer's
-    * SIZE ESTIMATE — zero Spark jobs, so the hot extract queries pay
-    * nothing for the discipline; over the bound the plain equi-join
-    * plans and AQE picks the strategy from runtime sizes. 256 MB is
-    * far above any labeled point set and comfortably under the 8 GB
-    * broadcast cap even with estimate error. */
-  val BroadcastPointsBytes: Long = 256L * 1024 * 1024
-
   /**
    * J1: per-point band extraction. `raster` = (cell, band columns...).
    * Emits one row per (point x covered cell) with bands + label —
@@ -43,10 +33,7 @@ object Extract {
    */
   def extract(points: DataFrame, raster: DataFrame, res: Int,
               bands: Seq[String], sentinel: Option[Any] = None): DataFrame = {
-    val p = pointsWithCells(points, res)
-    val small = p.queryExecution.optimizedPlan.stats.sizeInBytes <=
-      BroadcastPointsBytes
-    val joined = raster.join(if (small) broadcast(p) else p, Seq("cell"))
+    val joined = raster.join(pointsWithCells(points, res), Seq("cell"))
     sentinel match {
       case Some(s) => Mask.dropFullyMasked(joined, bands, s)
       case None => joined

@@ -55,12 +55,6 @@ object Knn {
     * rows it takes. */
   val MaxProbeRows = 4_000_000L
 
-  /** Row bound for broadcasting the residual brute-force query side
-    * (the Ann.BroadcastQueryLimit convention — qid/qlon/qlat rows are
-    * tens of bytes, so 2M rows is tens of MB); beyond it the residue
-    * runs as a chunked broadcast loop. */
-  val BruteBroadcastLimit = 2_000_000L
-
   /** points: (qid, qlon, qlat); pages: (cell, id, lon, lat).
     * Returns (qid, rank, id, dist2) with rank 1..k. */
   /** `probeRows`: opt-in instrumentation — accumulates the EXACT
@@ -135,23 +129,10 @@ object Knn {
       // regions emptier than disk(maxRadius) — still exact, and the
       // two-phase top-k keeps the reduction partition-local even here).
       // The query side ALWAYS broadcasts — an unhinted crossJoin plans
-      // as CartesianProduct, replicating the big pages side — but the
-      // broadcast is row-count bounded: beyond BruteBroadcastLimit the
-      // residue runs as a deterministic chunked loop (each qid in
-      // exactly one xxhash64-modulo chunk), the Ann.cosineTopK pattern.
-      val resid = pending.drop("qcell").cache()
-      def bruteTopK(qs: DataFrame): DataFrame =
-        topkOf(pages.crossJoin(broadcast(qs)))
-      val brute =
-        if (nPending <= BruteBroadcastLimit) bruteTopK(resid)
-        else {
-          val nChunks =
-            ((nPending + BruteBroadcastLimit - 1) / BruteBroadcastLimit).toInt
-          (0 until nChunks).map { i =>
-            bruteTopK(resid.filter(
-              pmod(xxhash64(col("qid")), lit(nChunks)) === i))
-          }.reduce(_ unionByName _)
-        }
+      // as CartesianProduct, replicating the big pages side — in as many
+      // chunks as its measured bytes need (the Ann.cosineTopK loop).
+      val brute = org.apache.spark.sql.graft.GatePlans.broadcastChunks(
+        pending.drop("qcell").cache(), "qid")(qs => topkOf(pages.crossJoin(qs)))
       results = if (results == null) brute else results.unionByName(brute)
     }
     // an empty points input never assigns results (no rounds, no

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GatePlans
 
 import TextOps._
 
@@ -235,12 +236,6 @@ object Dedup {
     * Cache lifetime is the CALLER's (the returned plan references the
     * cached relations lazily); Verify/Bench clearCache between queries.
     */
-  /** Candidate-pair count above which the verify-side semi-join stops
-    * broadcasting the candidate id set (2 longs/pair — beyond this the
-    * driver-collected broadcast is the OOM risk, and a shuffled
-    * semi-join is the right plan anyway). */
-  val BroadcastCandLimit = 4_000_000L
-
   /** Candidate-pair count below which the exact-Jaccard verify runs
     * SET-BASED: per-candidate-doc shingle sets via collect_set (ONE
     * map-side-combining shuffle of raw occurrences — replaces the
@@ -255,23 +250,11 @@ object Dedup {
     * Both paths produce identical values (set semantics either way). */
   val SetVerifyCandLimit = 200_000L
 
-  /** Byte budget for BROADCASTING the set relation into the pair
-    * joins. The pair count says nothing about document length — 150k
-    * pairs of 100 KB documents carry tens of GB of shingles — so the
-    * broadcast hint is gated on the MEASURED shingle volume of the
-    * candidate docs (summed during the same aggregation that builds
-    * the sets; an upper bound since raw occurrences count duplicates).
-    * Over budget, the same set-based joins run shuffled — still one
-    * shingle-relation shuffle + two set-relation shuffles, strictly
-    * fewer bytes than the pair-join path. */
-  val SetVerifyBroadcastBytes = 256L * 1024 * 1024
-
   def minhashLsh(df: DataFrame, idCol: String, textCol: String,
                  threshold: Double = 0.4, numHashes: Int = 8,
                  rowsPerBand: Int = 2, k: Int = 3,
                  maxBucket: Option[Int] = None,
                  setVerifyLimit: Long = SetVerifyCandLimit,
-                 setBroadcastBytes: Long = SetVerifyBroadcastBytes,
                  salvageFactor: Option[Int] = None): DataFrame = {
     val shAll = docShinglesAll(df, idCol, textCol, k)
     // signatures via the per-row kernel (round-6): one pass over the
@@ -288,41 +271,23 @@ object Dedup {
     val bnd = bands(sig, numHashes, rowsPerBand).cache()
     val cand = candidates(bnd, maxBucket, salvageFactor).cache()
     // no distinct: a semi-join right side tolerates duplicates, and the
-    // distinct would cost one more (tiny but scheduled) shuffle
-    val candIds = cand.select(col("id_a").as("id"))
-      .union(cand.select(col("id_b").as("id")))
+    // distinct would cost one more (tiny but scheduled) shuffle. The
+    // gate finds the cached cand already loaded by the count below.
+    val candIds = GatePlans.gate(cand.select(col("id_a").as("id"))
+      .union(cand.select(col("id_b").as("id"))))
     // the count is over the CACHED cand, so it costs one traversal that
-    // the verify join reuses; it gates BOTH broadcasts below — a
-    // pathological corpus with huge LSH buckets falls back to shuffled
-    // joins instead of OOMing the driver
-    val nCand = cand.count()
-    // BOTH branches gate the candIds broadcast on BroadcastCandLimit —
-    // a caller who raises setVerifyLimit above it must not bypass the
-    // driver-OOM guard the fallback path enforces (ADVICE r4 #1)
-    val candIdsHinted =
-      if (nCand <= BroadcastCandLimit) broadcast(candIds) else candIds
-    if (nCand <= setVerifyLimit) {
-      // `bytes` rides the same aggregation that builds the sets (raw
-      // occurrences — an upper bound on the true set volume); cached so
-      // the byte-gating count and both pair joins share one traversal
-      // (caller-owned lifetime, the minhashLsh convention)
-      val sets = shAll.join(candIdsHinted, Seq("id"), "left_semi")
-        .groupBy("id").agg(collect_set(col("shingle")).as("ss"),
-          sum(octet_length(col("shingle")).cast("long")).as("bytes"))
-        .select(col("id"), col("ss"), size(col("ss")).cast("long").as("n"),
-          col("bytes"))
+    // the verify joins reuse
+    if (cand.count() <= setVerifyLimit) {
+      // cached: both pair joins read it, and the gate's measuring count
+      // loads it (caller-owned lifetime, the minhashLsh convention)
+      val sets = shAll.join(candIds, Seq("id"), "left_semi")
+        .groupBy("id").agg(collect_set(col("shingle")).as("ss"))
+        .select(col("id"), col("ss"), size(col("ss")).cast("long").as("n"))
         .cache()
-      val totalBytes = sets.agg(coalesce(sum(col("bytes")), lit(0L)))
-        .first().getLong(0)
-      // the hint is gated on measured BYTES, not pair count — long
-      // documents must not ride a driver-sized broadcast
-      val hint: DataFrame => DataFrame =
-        if (totalBytes <= setBroadcastBytes) df => broadcast(df)
-        else df => df
       cand
-        .join(hint(sets.select(col("id").as("id_a"),
+        .join(GatePlans.gate(sets.select(col("id").as("id_a"),
           col("ss").as("ss_a"), col("n").as("n_a"))), Seq("id_a"))
-        .join(hint(sets.select(col("id").as("id_b"),
+        .join(GatePlans.gate(sets.select(col("id").as("id_b"),
           col("ss").as("ss_b"), col("n").as("n_b"))), Seq("id_b"))
         .select(col("id_a"), col("id_b"),
           size(array_intersect(col("ss_a"), col("ss_b"))).cast("long")
@@ -336,7 +301,7 @@ object Dedup {
         // (ADVICE r4 #2 — identical row sets on both paths, any threshold)
         .filter(col("common") > 0 && col("jaccard") >= threshold)
     } else {
-      val sh = shAll.join(candIdsHinted, Seq("id"), "left_semi")
+      val sh = shAll.join(candIds, Seq("id"), "left_semi")
         .distinct().cache()
       // normalized column order: identical schema on both verify paths
       jaccard(cand, sh).filter(col("jaccard") >= threshold)
@@ -406,15 +371,6 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** Hot-shingle count bound for BROADCASTING the df > cap shingle set
-    * into the rare/hot occurrence split (round-6). A cap that is doing
-    * its job leaves FEW hot shingles (boilerplate n-grams), so the
-    * split is two map-side anti/semi joins against a broadcast set and
-    * the full occurrence relation never shuffles by shingle just to
-    * learn its df. Rows are short strings (tens of bytes); beyond the
-    * limit the shuffled df-tagging join remains the 100-TB-safe plan. */
-  val BroadcastHotShingleLimit = 2_000_000L
-
   /** Exact n-gram-Jaccard near-dup via the inverted shingle index
     * (no LSH): every pair sharing >= 1 shingle is scored exactly.
     *
@@ -428,9 +384,7 @@ object Dedup {
     * missed (the standard recall trade; None = fully exact). */
   def ngramJaccard(df: DataFrame, idCol: String, textCol: String,
                    threshold: Double, k: Int = 3,
-                   maxDf: Option[Int] = None,
-                   hotBroadcastLimit: Long = BroadcastHotShingleLimit)
-                  : DataFrame = {
+                   maxDf: Option[Int] = None): DataFrame = {
     val sh = docShingles(df, idCol, textCol, k).cache()
     maxDf match {
       case Some(cap) =>
@@ -441,30 +395,17 @@ object Dedup {
         // candidate pairs only — the full-set Jaccard stays exact while
         // nothing quadratic ever touches a hot shingle
         val dfRel = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-        // rare/hot split (round-6): the occurrences only need a BINARY
-        // df <= cap decision, not the df value — and the hot set
-        // (df > cap) is small by construction wherever the cap is
-        // meaningful, so under the count gate it broadcasts and the
-        // split is two map-side anti/semi joins over the cached shingle
-        // relation (the old shape shuffled EVERY occurrence through a
-        // join with the df table just to read one bit of it). Over the
-        // gate — a corpus whose boilerplate is so diverse that hot
-        // shingles alone outgrow a broadcast — the shuffled df-tagging
-        // join stays the plan.
-        val hotShingles = dfRel.filter(col("df") > cap).select("shingle")
-          .cache()
-        val (rare, hot) =
-          if (hotShingles.count() <= hotBroadcastLimit) {
-            (sh.join(broadcast(hotShingles), Seq("shingle"), "left_anti"),
-              sh.join(broadcast(hotShingles), Seq("shingle"), "left_semi"))
-          } else {
-            // tag every occurrence with its shingle's document frequency
-            // in ONE join (two separate semi-joins would compute the df
-            // aggregate twice), then split rare/hot by filter
-            val withDf = sh.join(dfRel, Seq("shingle")).cache()
-            (withDf.filter(col("df") <= cap).drop("df"),
-              withDf.filter(col("df") > cap).drop("df"))
-          }
+        // rare/hot split: the occurrences only need a BINARY df <= cap
+        // decision, not the df value — and the hot set (df > cap) is
+        // small by construction wherever the cap is meaningful, so under
+        // the broadcast gate the split is two map-side anti/semi joins
+        // over the cached shingle relation. Over the budget the same
+        // joins run shuffled against the cached hot set (the df
+        // aggregate is computed once either way).
+        val hotShingles = GatePlans.gate(
+          dfRel.filter(col("df") > cap).select("shingle").cache())
+        val rare = sh.join(hotShingles, Seq("shingle"), "left_anti")
+        val hot = sh.join(hotShingles, Seq("shingle"), "left_semi")
         val a = rare.alias("a"); val b = rare.alias("b")
         val commonRare = a.join(b, col("a.shingle") === col("b.shingle") &&
             col("a.id") < col("b.id"))
@@ -515,15 +456,6 @@ object Dedup {
     * Beyond-reference operator (builder mandate): the reference emits
     * pair lists only. Caches each round's label relation; caller owns
     * the lifetime of the returned (final) relation. */
-  /** Label-table row bound for broadcasting the label side of the CC
-    * round join (the BroadcastCandLimit discipline): the id set is
-    * FIXED after seeding — labels change value, never cardinality — so
-    * one count decides the strategy for every round. Under the limit
-    * the round join is a broadcast hash join (the only exchange left
-    * per round is the groupBy); over it, the shuffled equi-join is the
-    * right 100-TB plan. ~24 bytes/row. */
-  val BroadcastLabelLimit = 1_000_000L
-
   def clusters(pairs: DataFrame, maxRounds: Int = 50,
                checkpointDir: Option[String] = None): DataFrame = {
     val sc = pairs.sparkSession.sparkContext
@@ -576,12 +508,13 @@ object Dedup {
         least(col("src"), col("nmin")).as("label")))
     var converged = false
     // the id set is fixed for the whole loop (labels change value,
-    // never cardinality): ONE count over the checkpointed seed gates
-    // the round join's broadcast for every round (round-6 — under the
-    // limit only the groupBy exchange remains per round)
+    // never cardinality), so ONE gate decision before the loop holds
+    // for every round: under the budget only the groupBy exchange
+    // remains per round. The label table has one row per distinct edge
+    // source and the same two id columns as the edges, so the measured
+    // edge relation bounds it.
     val labelHint: DataFrame => DataFrame =
-      if (lab.count() <= BroadcastLabelLimit) df => broadcast(df)
-      else df => df
+      if (GatePlans.fits(e)) df => broadcast(df) else df => df
     // the relation pinned this round but not yet promoted to `lab` —
     // a failure between pin(next) and `lab = next` must release BOTH
     // (ADVICE r4 #4: the finally block used to leak next's files)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 /**
  * Cache-lifetime helper for operators with CALLER-OWNED caches
  * (VERDICT r4 next #7): minhashLsh, overlapsAnyPointByCells and the
- * count-gated ANN entry points cache small relations whose lifetime is
+ * broadcast-gated ANN entry points cache small relations whose lifetime is
  * the caller's session — the returned plans reference them lazily, so
  * the operator itself can never safely unpersist. Verify/Bench clear
  * between queries; a long-lived service should not need to know that

@@ -5,76 +5,77 @@ import org.apache.spark.sql.catalyst.plans.logical.{
   BROADCAST, Filter, HintInfo, Join, JoinHint, LogicalPlan, Project, UnaryNode}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.classic
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.functions.{broadcast, col, lit, pmod, xxhash64}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.DataFrame
 
 /**
- * Deferred count-gated broadcast (round-4 verdict weak #1 generalized):
- * the ANN entry points force a broadcast of the query relation only when
- * it is provably small, with a shuffled fallback above the limit. The
- * original gate ran `count()` at PLAN-BUILD time, so merely *assembling*
- * a plan (e.g. compiling a declarative `ann_topk` task) launched Spark
- * jobs. Here the gate is a marker [[BroadcastGate]] node on the query
- * side of the join, and [[ResolveBroadcastGate]] — an optimizer rule, so
- * it runs at ACTION time, lazily — performs the count and either sets
- * the join's BROADCAST hint or strips the marker (shuffled equi-join
- * fallback). The decision is identical to the eager gate; only WHEN it
- * runs moves. The query side is cached by the builder, so the gating
- * count and the join share one traversal exactly as before.
+ * The engine's one broadcast gate. A join side the engine would like to
+ * broadcast (candidate ids, shingle sets, hot shingles, query vectors)
+ * is wrapped in a [[BroadcastGate]] marker by [[GatePlans.gate]]. At
+ * ACTION time [[ResolveBroadcastGate]] — an optimizer rule, so building
+ * a plan launches no job — measures the side in bytes and sets the
+ * join's BROADCAST hint only when it fits the session's
+ * `spark.sql.autoBroadcastJoinThreshold`, Spark's own broadcast budget.
+ * Over budget the marker is just removed and the join plans without a
+ * hint.
+ *
+ * The measurement ([[GatePlans.sizeInBytes]]): when the side reads a
+ * cached relation that is not yet loaded, one count materializes it;
+ * then the side's `stats.sizeInBytes` is read, which is exact for a
+ * loaded `InMemoryRelation` (the builders cache their gated sides, so
+ * the join reuses what the count loaded). A side with no cached leaf is
+ * measured by the optimizer's estimate, the same test Spark's planner
+ * applies.
  *
  * 100-TB note: this is why the gate exists at all — an unhinted join
- * under AQE still shuffle-WRITES the corpus side before the runtime
- * size of the query side is known, while a logical BROADCAST hint skips
- * the corpus shuffle entirely. The gate gets the hint in when safe
- * (bounded driver memory) without paying a job at plan-assembly.
+ * under AQE still shuffle-WRITES the big side before the runtime size
+ * of the small side is known, while a logical BROADCAST hint skips that
+ * shuffle entirely. The gate gets the hint in only when the measured
+ * bytes fit the budget (bounded driver memory).
  */
-case class BroadcastGate(child: LogicalPlan, limit: Long) extends UnaryNode {
+case class BroadcastGate(child: LogicalPlan) extends UnaryNode {
   override def output: Seq[Attribute] = child.output
   override def maxRows: Option[Long] = child.maxRows
   override protected def withNewChildInternal(newChild: LogicalPlan): BroadcastGate =
     copy(child = newChild)
 }
 
-/** Resolves every [[BroadcastGate]]: counts the gated relation (cache
-  * hit — builders cache it) and rewrites the enclosing [[Join]] with a
-  * BROADCAST [[JoinHint]] when the count fits, else just removes the
-  * marker. Runs once per query execution (markers are consumed, so the
-  * fixed-point batch converges after one pass and later passes are
-  * no-ops). Gates not directly under a join (through Project/Filter
-  * wrappers Catalyst may interpose) are handled; anywhere else the
-  * marker is stripped without a hint. */
+/** Resolves every [[BroadcastGate]] under a [[Join]]: measures the gated
+  * side and rewrites the join with a BROADCAST [[JoinHint]] when it
+  * fits, else just removes the marker. Markers are consumed, so the
+  * fixed-point batch converges after one pass. Gates below Project/Filter
+  * wrappers Catalyst may interpose are handled; a gate anywhere else is
+  * stripped without a hint. */
 case class ResolveBroadcastGate(session: classic.SparkSession)
     extends Rule[LogicalPlan] {
 
-  /** (side with the marker removed, the gated relation to count, limit) */
-  private def strip(side: LogicalPlan): Option[(LogicalPlan, LogicalPlan, Long)] =
-    side match {
-      case BroadcastGate(c, l) => Some((c, c, l))
-      case p: Project =>
-        strip(p.child).map { case (s, c, l) => (p.copy(child = s), c, l) }
-      case f: Filter =>
-        strip(f.child).map { case (s, c, l) => (f.copy(child = s), c, l) }
-      case _ => None
-    }
-
-  private def fits(counted: LogicalPlan, limit: Long): Boolean =
-    classic.Dataset.ofRows(session, counted).count() <= limit
+  /** The side with its marker removed, if it carries one. */
+  private def strip(side: LogicalPlan): Option[LogicalPlan] = side match {
+    case BroadcastGate(c) => Some(c)
+    case p: Project => strip(p.child).map(s => p.copy(child = s))
+    case f: Filter => strip(f.child).map(s => f.copy(child = s))
+    case _ => None
+  }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
     case j @ Join(l, r, t, cond, hint) =>
       val ls = strip(l); val rs = strip(r)
       if (ls.isEmpty && rs.isEmpty) j
       else {
-        val (nl, lh) = ls.map { case (s, c, lim) =>
-          (s, if (fits(c, lim)) Some(HintInfo(Some(BROADCAST))) else hint.leftHint)
-        }.getOrElse((l, hint.leftHint))
-        val (nr, rh) = rs.map { case (s, c, lim) =>
-          (s, if (fits(c, lim)) Some(HintInfo(Some(BROADCAST))) else hint.rightHint)
-        }.getOrElse((r, hint.rightHint))
+        def side(stripped: Option[LogicalPlan], orig: LogicalPlan,
+                 h: Option[HintInfo]): (LogicalPlan, Option[HintInfo]) =
+          stripped.map { s =>
+            (s, if (GatePlans.fits(session, s)) Some(HintInfo(Some(BROADCAST))) else h)
+          }.getOrElse((orig, h))
+        val (nl, lh) = side(ls, l, hint.leftHint)
+        val (nr, rh) = side(rs, r, hint.rightHint)
         Join(nl, nr, t, cond, JoinHint(lh, rh))
       }
     // a gate that never met a join (caller used the relation elsewhere):
     // pass through — the marker must never change results
-    case BroadcastGate(c, _) => c
+    case BroadcastGate(c) => c
   }
 }
 
@@ -82,38 +83,85 @@ case class ResolveBroadcastGate(session: classic.SparkSession)
   * package placement is only for `classic.Dataset.ofRows` access). */
 object GatePlans {
 
-  /** Wrap a query-side relation in a deferred broadcast gate. Requires
-    * [[register]] on the session first — an unregistered marker would
-    * fail physical planning (no strategy), never mis-execute. */
-  def gate(df: DataFrame, limit: Long): DataFrame = {
+  /** Wrap a join side in a deferred broadcast gate, installing
+    * [[ResolveBroadcastGate]] on the side's session (idempotent; the
+    * `experimental.extraOptimizations` hook attaches to a built
+    * session). Cache the side first when it is not a cheap scan: the
+    * measuring count then loads what the join reads. */
+  def gate(df: DataFrame): DataFrame = {
     val s = df.sparkSession.asInstanceOf[classic.SparkSession]
-    classic.Dataset.ofRows(s, BroadcastGate(df.queryExecution.analyzed, limit))
+    install(s)
+    classic.Dataset.ofRows(s, BroadcastGate(df.queryExecution.analyzed))
   }
 
-  /** Idempotently install [[ResolveBroadcastGate]] on a session (the
-    * `experimental.extraOptimizations` hook — runtime-attachable, so
-    * already-built sessions get it too). [[registered]] is what the
-    * entry points probe to choose deferred vs eager gating. */
-  def register(s: SparkSession): Unit = synchronized {
-    if (!registered(s))
+  private def install(s: classic.SparkSession): Unit = synchronized {
+    if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[ResolveBroadcastGate]))
       s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+
-          ResolveBroadcastGate(s.asInstanceOf[classic.SparkSession])
+        s.experimental.extraOptimizations :+ ResolveBroadcastGate(s)
   }
 
-  /** True when the session resolves [[BroadcastGate]] markers at action
-    * time. Two routes: the runtime-attached `extraOptimizations` copy,
-    * OR a session built with `spark.sql.extensions=graft.GraftExtensions`
-    * — the latter's preCBO rule is constructed lazily with the optimizer
-    * (first action), AFTER plan-assembly probes this method, so the conf
-    * is the only compile-time-visible signal. Sound because the preCBO
-    * rule is guaranteed to exist before the first optimization consumes
-    * the marker, and an unconsumed marker fails physical planning
-    * loudly rather than mis-executing. */
-  def registered(s: SparkSession): Boolean =
-    s.experimental.extraOptimizations.exists(_.isInstanceOf[ResolveBroadcastGate]) ||
-      s.conf.getOption(org.apache.spark.sql.internal.StaticSQLConf.SPARK_SESSION_EXTENSIONS.key)
-        .exists(_.contains("graft.GraftExtensions"))
+  /** Exact in-memory bytes of a cached relation, or the optimizer's
+    * estimate of an uncached one: one count first loads any cached
+    * leaf that is not yet materialized. */
+  def sizeInBytes(df: DataFrame): BigInt = {
+    val s = df.sparkSession.asInstanceOf[classic.SparkSession]
+    sizeInBytes(s, optimized(s, df))
+  }
+
+  /** A fresh optimization: `df`'s own plan may predate its `.cache()`. */
+  private def optimized(s: classic.SparkSession, df: DataFrame): LogicalPlan =
+    classic.Dataset.ofRows(s, df.queryExecution.analyzed).queryExecution.optimizedPlan
+
+  private def sizeInBytes(s: classic.SparkSession, plan: LogicalPlan): BigInt = {
+    val unloaded = plan.exists {
+      case m: InMemoryRelation => !m.cacheBuilder.isCachedColumnBuffersLoaded
+      case _ => false
+    }
+    // a row count of the side's RDD with every column pruned: one job,
+    // no aggregate stage, no column decoded (the cache still loads whole)
+    if (unloaded) classic.Dataset.ofRows(s, Project(Nil, plan)).queryExecution.toRdd.count()
+    // stats are memoized per node: a pre-load read would be the
+    // estimate of the plan that was cached, not the loaded bytes
+    plan.invalidateStatsCache()
+    plan.stats.sizeInBytes
+  }
+
+  /** Spark's broadcast test (`JoinSelectionHelper.canBroadcastBySize`)
+    * on measured bytes: a non-positive threshold admits nothing larger
+    * than zero bytes, -1 admits nothing. */
+  private[graft] def fits(s: classic.SparkSession, plan: LogicalPlan): Boolean = {
+    val size = sizeInBytes(s, plan)
+    size >= 0 && size <= s.sessionState.conf.autoBroadcastJoinThreshold
+  }
+
+  /** The gate decided now, for a loop that picks its join strategy once
+    * for every round (connected components). */
+  def fits(df: DataFrame): Boolean = {
+    val s = df.sparkSession.asInstanceOf[classic.SparkSession]
+    fits(s, optimized(s, df))
+  }
+
+  /** Cross-join loop that must always broadcast `q` (an unhinted cross
+    * join plans as a CartesianProduct that replicates the big side):
+    * `q` splits into ⌈measured bytes / threshold⌉ chunks by
+    * `pmod(xxhash64(key), n)`, each chunk is broadcast into `f`, and the
+    * results are unioned. Every key lands in exactly one chunk, so the
+    * union is a disjoint partition of the one-chunk result. The measuring
+    * count is the one Spark job this costs while the plan is built. A
+    * non-positive threshold (broadcasts disabled) cannot disable a
+    * broadcast these loops need: chunks are then sized by Spark's
+    * default threshold. */
+  def broadcastChunks(q: DataFrame, key: String)
+                     (f: DataFrame => DataFrame): DataFrame = {
+    val s = q.sparkSession.asInstanceOf[classic.SparkSession]
+    val t = s.sessionState.conf.autoBroadcastJoinThreshold
+    val budget = if (t > 0) t else SQLConf.AUTO_BROADCASTJOIN_THRESHOLD.defaultValue.get
+    val n = ((sizeInBytes(q) + budget - 1) / budget).max(1).min(Int.MaxValue).toInt
+    if (n == 1) f(broadcast(q))
+    else (0 until n).map { i =>
+      f(broadcast(q.filter(pmod(xxhash64(col(key)), lit(n)) === i)))
+    }.reduce(_ unionByName _)
+  }
 
   /** Deep-nullable view of a schema (`StructType.asNullable` is
     * `private[spark]`): file-source inference reports every column

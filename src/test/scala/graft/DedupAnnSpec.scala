@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
+import graft.SparkSessionHelper.{broadcastHints, joins, withBroadcastThreshold}
 import graft.text.{Dedup, TextOps}
 import graft.vector.Ann
 
@@ -69,21 +70,24 @@ class DedupAnnSpec extends AnyFunSuite with PropHelper {
     // setVerifyLimit = 0 forces the shuffled pair-join formulation; the
     // default takes the collect_set + broadcast + array_intersect path.
     // Same candidates, same exact values either way.
-    def rows(limit: Long) =
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => ((r.getAs[Long]("id_a"), r.getAs[Long]("id_b")),
+          (r.getAs[Long]("common"), r.getAs[Long]("n_a"),
+            r.getAs[Long]("n_b"), r.getAs[Double]("jaccard")))).toMap
+    def lsh(limit: Long = Dedup.SetVerifyCandLimit) =
       Dedup.minhashLsh(docs, "doc_id", "text", 0.4, setVerifyLimit = limit)
-        .collect().map(r => ((r.getAs[Long]("id_a"), r.getAs[Long]("id_b")),
-          (r.getAs[Long]("common"), r.getAs[Long]("n_a"),
-            r.getAs[Long]("n_b"), r.getAs[Double]("jaccard")))).toMap
-    val fast = rows(Dedup.SetVerifyCandLimit)
-    val fallback = rows(0L)
+    val fast = rows(lsh())
+    val fallback = rows(lsh(0L))
     assert(fast == fallback && fast.nonEmpty)
-    // byte-gated broadcast: over-budget shingle volume (budget 0) keeps
-    // the set path but drops the hint — values identical again
-    val shuffledSets =
-      Dedup.minhashLsh(docs, "doc_id", "text", 0.4, setBroadcastBytes = 0L)
-        .collect().map(r => ((r.getAs[Long]("id_a"), r.getAs[Long]("id_b")),
-          (r.getAs[Long]("common"), r.getAs[Long]("n_a"),
-            r.getAs[Long]("n_b"), r.getAs[Double]("jaccard")))).toMap
+    // the set relation's broadcast follows the gate: under the budget
+    // both pair joins are hinted; with broadcasts disabled the set path
+    // runs shuffled — values identical again
+    assert(broadcastHints(lsh()) == 2)
+    val shuffledSets = withBroadcastThreshold(-1) {
+      val df = lsh()
+      assert(broadcastHints(df) == 0)
+      rows(df)
+    }
     assert(shuffledSets == fast)
   }
 
@@ -138,25 +142,46 @@ class DedupAnnSpec extends AnyFunSuite with PropHelper {
     assert(cap1.isEmpty)
   }
 
-  test("ngram df-cap: broadcast hot-set split == shuffled df-tagging") {
+  test("ngram df-cap: broadcast hot-set split == shuffled split") {
     // cap 2 exercises BOTH tiers on the fixture: the 5 shingles shared
     // by docs 1/2/3 are hot (df 3), docs 1/2's tail shingle is rare
     // (df 2) -> pair (1,2) is a rare candidate whose common count needs
     // the hot add-back (5 hot + 1 rare = all 6 shingles, jaccard 1.0).
-    // hotBroadcastLimit = 0 forces the shuffled fallback; identical
-    // rows either way (round-6 gate parity, the minhash-verify pattern).
-    def rows(limit: Long) = Dedup.ngramJaccard(docs, "doc_id", "text",
-        0.3, maxDf = Some(2), hotBroadcastLimit = limit)
+    // With broadcasts disabled the same anti/semi joins run shuffled;
+    // identical rows either way.
+    def capped = Dedup.ngramJaccard(docs, "doc_id", "text", 0.3,
+      maxDf = Some(2))
+    def rows(df: org.apache.spark.sql.DataFrame) = df
       .collect().map(r => ((r.getAs[Long]("id_a"), r.getAs[Long]("id_b")),
         (r.getAs[Long]("common"), r.getAs[Long]("n_a"),
           r.getAs[Long]("n_b"), r.getAs[Double]("jaccard")))).toMap
-    val bcast = rows(Dedup.BroadcastHotShingleLimit)
-    val shuffled = rows(0L)
+    val bcastDf = capped
+    assert(broadcastHints(bcastDf) > 0)
+    val bcast = rows(bcastDf)
+    val shuffled = withBroadcastThreshold(-1) {
+      val df = capped
+      assert(broadcastHints(df) == 0)
+      rows(df)
+    }
     assert(bcast == shuffled)
     assert(bcast((1L, 2L)) == ((6L, 6L, 6L, 1.0)))
     // the hot-only pair (1,3) is correctly absent: nothing rarer than
     // the cap is shared
     assert(!bcast.contains((1L, 3L)))
+  }
+
+  test("broadcast gate boundary: budget = measured bytes hints, one less does not") {
+    import org.apache.spark.sql.graft.GatePlans
+    val small = spark.range(50)
+      .select(col("id").as("k"), (col("id") * 3).as("v")).cache()
+    try {
+      val big = spark.range(1000).select(col("id").as("k"))
+      val bytes = GatePlans.sizeInBytes(small)
+      assert(bytes > 0)
+      def hints = broadcastHints(big.join(GatePlans.gate(small), "k"))
+      assert(withBroadcastThreshold(bytes)(hints) == 1)
+      assert(withBroadcastThreshold(bytes - 1)(hints) == 0)
+    } finally small.unpersist()
   }
 
   val vecs = (0L until 20L).map { i =>
@@ -520,17 +545,27 @@ class DedupAnnSpec extends AnyFunSuite with PropHelper {
   }
 
   test("cosineTopK chunked query loop == broadcast path (exact)") {
-    // broadcastLimit 3 over 20 queries -> 7 xxhash64-modulo chunks;
-    // qids partition across chunks, so the union must be row-identical
-    // to the single-broadcast plan (the over-limit driver-OOM fallback,
-    // VERDICT r3 item 1)
+    // a 1 KiB budget splits 20 queries into several xxhash64-modulo
+    // chunks; qids partition across chunks, so the union must be
+    // row-identical to the single-broadcast plan (the over-budget
+    // driver-OOM fallback, VERDICT r3 item 1). A non-positive threshold
+    // cannot disable the broadcast the cross join needs: chunks are
+    // sized by Spark's default budget, i.e. one chunk here.
     val q = vecs.select($"id".as("qid"), Ann.quantize($"emb").as("qv"))
     val c = vecs.select($"id", Ann.quantize($"emb").as("v"))
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
       .sortBy(t => (t._1, t._2)).toSeq
-    assert(rows(Ann.cosineTopK(q, c, 3, broadcastLimit = 3)) ==
-      rows(Ann.cosineTopK(q, c, 3)))
+    val one = Ann.cosineTopK(q, c, 3)
+    assert(joins(one) == 1)
+    val chunked = withBroadcastThreshold(1024)(Ann.cosineTopK(q, c, 3))
+    assert(joins(chunked) >= 3, s"${joins(chunked)} chunk(s)")
+    assert(rows(chunked) == rows(one))
+    for (t <- Seq(0, -1)) {
+      val df = withBroadcastThreshold(t)(Ann.cosineTopK(q, c, 3))
+      assert(joins(df) == 1, s"threshold $t")
+      assert(rows(df) == rows(one))
+    }
   }
 
   test("lsh/ivf top-k: shuffled fallback == broadcast path (exact)") {
@@ -539,13 +574,17 @@ class DedupAnnSpec extends AnyFunSuite with PropHelper {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
       .sortBy(t => (t._1, t._2)).toSeq
-    // broadcastLimit 0 forces the no-hint equi-join on every path
-    assert(rows(Ann.lshTopK(q, c, 64, 3, broadcastLimit = 0)) ==
-      rows(Ann.lshTopK(q, c, 64, 3)))
-    assert(rows(Ann.lshTopKMultiProbe(q, c, 64, 3, broadcastLimit = 0)) ==
-      rows(Ann.lshTopKMultiProbe(q, c, 64, 3)))
-    assert(rows(Ann.ivfTopK(q, c, 64, 3, broadcastLimit = 0)) ==
-      rows(Ann.ivfTopK(q, c, 64, 3)))
+    // with broadcasts disabled every path runs the no-hint equi-join
+    for (mk <- Seq(() => Ann.lshTopK(q, c, 64, 3),
+                   () => Ann.lshTopKMultiProbe(q, c, 64, 3),
+                   () => Ann.ivfTopK(q, c, 64, 3))) {
+      val shuffled = withBroadcastThreshold(-1) {
+        val df = mk()
+        assert(broadcastHints(df) == 0)
+        rows(df)
+      }
+      assert(shuffled == rows(mk()))
+    }
   }
 
   test("clusters: durable-checkpoint mode gives identical components") {
@@ -613,7 +652,18 @@ class DedupAnnSpec extends AnyFunSuite with PropHelper {
     // cap 1: zero ring-expansion rounds run — 6 x (2*4+1)^2 = 486 probe
     // rows already exceed it, so everything goes straight to the exact
     // brute-force pass; results must be identical to the default path
-    assert(run(1L) == run(graft.ops.Knn.MaxProbeRows))
+    val exact = run(graft.ops.Knn.MaxProbeRows)
+    assert(run(1L) == exact)
+    // the brute-force residue is the chunked broadcast loop: a tiny
+    // budget splits it, a non-positive threshold sizes chunks by Spark's
+    // default budget (one chunk) — exact either way
+    def brute = graft.ops.Knn.knnJoin(pts, pages, 8, 3, maxProbeRows = 1L)
+    assert(joins(brute) == 1)
+    for ((t, many) <- Seq(64 -> true, 0 -> false, -1 -> false))
+      withBroadcastThreshold(t) {
+        assert((joins(brute) > 1) == many, s"threshold $t")
+        assert(run(1L) == exact, s"threshold $t")
+      }
     // measured, not asserted: the cap strictly reduces probe rows on an
     // adversarial sparse fixture (queries in empty regions force the
     // full ring ladder without a cap)

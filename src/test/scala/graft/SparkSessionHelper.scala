@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join}
 
 /** One shared local session for all Spark-backed suites. */
 object SparkSessionHelper {
@@ -13,7 +14,31 @@ object SparkSessionHelper {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
-    org.apache.spark.sql.graft.GatePlans.register(s)
     s
   }
+
+  /** Run `body` with `spark.sql.autoBroadcastJoinThreshold` = `bytes`
+    * (the broadcast gate's budget), restoring the previous value. The
+    * gate decides when a plan is optimized, so `body` must build AND
+    * optimize or execute what it checks. */
+  def withBroadcastThreshold[T](bytes: BigInt)(body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, bytes.toString)
+    try body finally spark.conf.set(key, prev)
+  }
+
+  /** Join nodes of `df`'s optimized plan that carry a BROADCAST hint —
+    * the gate's decision (at small sizes the executed plan cannot tell
+    * a hint from the planner's own size-based broadcast). */
+  def broadcastHints(df: DataFrame): Int =
+    df.queryExecution.optimizedPlan.collect {
+      case j: Join => Seq(j.hint.leftHint, j.hint.rightHint)
+        .count(_.exists(_.strategy.contains(BROADCAST)))
+    }.sum
+
+  /** Join nodes in `df`'s optimized plan (one per chunk of a chunked
+    * broadcast loop). */
+  def joins(df: DataFrame): Int =
+    df.queryExecution.optimizedPlan.collect { case j: Join => j }.size
 }

@@ -137,42 +137,17 @@ class WorkflowJsonSpec extends AnyFunSuite {
          |  "ann_topk": {"id": "vec_id", "vec": "embedding", "dim": 64,
          |               "k": 3, "method": "ivf", "queryMod": 100,
          |               "codebookPath": "$bookPath"}}}}""".stripMargin
-    // job-counting listener: measure the per-probe job cost, then
-    // assert a compile sandwiched between two probes adds nothing
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    def probe(): Unit = { spark.range(3).count(); () }
-    def settled(): Int = {
-      var prev = -1; var cur = jobs.get; var spins = 0
-      while (cur != prev && spins < 600) {
-        prev = cur; Thread.sleep(25); cur = jobs.get; spins += 1
-      }
-      cur
-    }
     // run the TRAIN task first (jobs expected — it's the action step)
     WorkflowJson.run(spark, sfDir,
       s"""{"train": {"inp": "embeddings", "train_codebook":
          |  {"vec": "embedding", "dim": 64, "iters": 2,
          |   "path": "$bookPath"}}}""".stripMargin)
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(bookPath)))
-    spark.sparkContext.addSparkListener(listener)
-    val compiled = try {
-      probe(); val a = settled()
-      probe(); val b = settled()
-      val probeCost = b - a
-      assert(probeCost > 0, "listener sanity: a count() must launch jobs")
-      val task = WorkflowJson.parse(j).get("search")
-      val df = WorkflowJson.compileTask(spark, sfDir, task)
-      probe(); val c = settled()
-      assert(c - b == probeCost,
-        s"ann_topk compile launched ${c - b - probeCost} Spark job(s)")
-      df
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (compiled, compileJobs) = JobCounter.jobsDuring(spark) {
+      WorkflowJson.compileTask(spark, sfDir, WorkflowJson.parse(j).get("search"))
+    }
+    assert(compileJobs == 0,
+      s"ann_topk compile launched $compileJobs Spark job(s)")
     val got = compiled
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
       .sortBy(t => (t._1, t._2)).toSeq
