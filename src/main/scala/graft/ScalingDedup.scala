@@ -132,19 +132,6 @@ object ScalingDedup {
         maxBucket = Some(64))),
       Job("minhash", corpus, c => Dedup.minhashLsh(c, "doc_id", "text", 0.4,
         maxBucket = Some(64))),
-      // iso-configuration minhash linearity: the DEFAULT config above
-      // crosses two scale-adaptive gates between the probe's two sizes
-      // (at 200k docs the 40k candidates verify set-based over a
-      // broadcast; at 800k docs the measured set relation exceeds
-      // spark.sql.autoBroadcastJoinThreshold and the set joins run
-      // shuffled), so its
-      // wall ratio measures the POLICY seam, not the machinery's
-      // growth. Forcing the pair-join verify on both legs
-      // (setVerifyLimit = 0) keeps one plan shape at both sizes — the
-      // honest linearity number; the adaptive line above stays as the
-      // default-config behavior report.
-      Job("minhash-pair", corpus, c => Dedup.minhashLsh(c, "doc_id", "text",
-        0.4, maxBucket = Some(64), setVerifyLimit = 0L)),
       // capped ngram-Jaccard over the boilerplate corpus (round-6 #7):
       // candidates from rare shingles, hot set broadcast (its size is
       // CONSTANT as the corpus grows — the trailer shingles), hot
@@ -171,58 +158,6 @@ object ScalingDedup {
       .getOrElse(allJobs)
     // warm (JIT + codegen) on the small size, then measure both sizes
     jobs.foreach { j => run(j.copy(name = s"warm-${j.name}"), n0 / 5) }
-    // mode=stages: per-stage breakdown of the minhash pipeline at n0
-    if (sys.env.get("SPARK_GRAFT_DEDUP_MODE").contains("stages")) {
-      val c = corpus(spark, n0, cpus * 4).cache()
-      c.count()
-      def st(name: String)(df: => DataFrame): Unit = {
-        val t0 = System.nanoTime()
-        val rows = df.count()
-        println(f"DEDUPSTAGE $name%-16s ${(System.nanoTime() - t0) / 1e9}%7.2fs rows=$rows")
-      }
-      val shAll = Dedup.docShinglesAll(c, "doc_id", "text")
-      st("shinglesAll")(shAll)
-      st("minhash")(Dedup.minhash(shAll))
-      val bnd = Dedup.bands(Dedup.minhash(shAll)).cache()
-      st("bands+cache")(bnd)
-      // (Join-strategy experiments ran here in round 4: a shuffle_hash
-      // hint on the band self-join and a cached capped relation both
-      // measure within noise of the SMJ plan once warm — the cold-run
-      // deltas were cache/JIT ordering artifacts. The band self-join's
-      // cost is inherent; nothing to fix.)
-      val cand = Dedup.candidates(bnd, Some(64)).cache()
-      st("candidates")(cand)
-      val candIds = cand.select(col("id_a").as("id"))
-        .union(cand.select(col("id_b").as("id")))
-      val sh = shAll.join(broadcast(candIds), Seq("id"), "left_semi")
-        .distinct().cache()
-      st("semi+distinct")(sh)
-      st("jaccard")(Dedup.jaccard(cand, sh)
-        .filter(col("jaccard") >= 0.4))
-      // EXPERIMENT: set-based verify — one collect_set shuffle + two
-      // broadcast joins + per-pair array intersection
-      val sets = shAll.join(broadcast(candIds), Seq("id"), "left_semi")
-        .groupBy("id").agg(collect_set(col("shingle")).as("ss"))
-        .select(col("id"), col("ss"), size(col("ss")).cast("long").as("n"))
-        .cache()
-      st("collect_sets")(sets)
-      st("jaccard-sets") {
-        cand
-          .join(broadcast(sets.select(col("id").as("id_a"),
-            col("ss").as("ss_a"), col("n").as("n_a"))), Seq("id_a"))
-          .join(broadcast(sets.select(col("id").as("id_b"),
-            col("ss").as("ss_b"), col("n").as("n_b"))), Seq("id_b"))
-          .select(col("id_a"), col("id_b"),
-            size(array_intersect(col("ss_a"), col("ss_b"))).cast("long")
-              .as("common"), col("n_a"), col("n_b"))
-          .withColumn("jaccard", col("common").cast("double") /
-            (col("n_a") + col("n_b") - col("common")).cast("double"))
-          .filter(col("jaccard") >= 0.4)
-      }
-      spark.catalog.clearCache()
-      spark.stop()
-      return
-    }
     // mode=single: one size only (for A/B runs across parallelism
     // levels — set SPARK_GRAFT_CPUS per run and compare the walls)
     if (sys.env.get("SPARK_GRAFT_DEDUP_MODE").contains("single")) {

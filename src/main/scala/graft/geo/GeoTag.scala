@@ -111,17 +111,6 @@ object GeoTag {
     }
   }
 
-  def lon(url: String): Double = lonLat(url)._1
-  def lat(url: String): Double = lonLat(url)._2
-
-  /** Fused url -> cell at resolution r: ONE md5 per row (separate
-    * lon/lat expressions each hash the host again — 2x the work on the
-    * hot geotag->encode path, which at 10^12 rows is the whole job). */
-  def cellOf(url: String, r: Int): Long = {
-    val (lo, la) = lonLat(url)
-    graft.cell.CellIndex.encode(lo, la, r)
-  }
-
   // ---- allocation-free byte-level kernel (hot tiling path) -----------------
 
   /** centroid lookup keyed by ascii-packed tld bytes (tlds <= 8 chars;

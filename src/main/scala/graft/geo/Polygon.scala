@@ -91,10 +91,6 @@ final case class Polygon(xs: Array[Double], ys: Array[Double]) extends Serializa
   /** Cells at res r covering the bbox (prefilter; exact PIP refines). */
   def coverCells(r: Int): Array[Long] =
     graft.cell.CellIndex.coverRect(lonMin, latMin, lonMax, latMax, r)
-
-  def intersectsBox(o: Polygon): Boolean =
-    !(o.lonMin > lonMax || o.lonMax < lonMin ||
-      o.latMin > latMax || o.latMax < latMin)
 }
 
 object Polygon {

@@ -44,16 +44,4 @@ object Indexes {
   /** F4 NDWI = (green - nir) / (green + nir). */
   def ndwi(green: Column, nir: Column, scaleFactor: Int = 1000): Column =
     scaled(norm_diff(green, nir), scaleFactor)
-
-  /** Name-dispatch parity with `Indexes` getattr dispatch
-    * (routines.py:121-124): unknown name is a user error. */
-  def byName(name: String, bands: Map[String, Column],
-             scaleFactor: Int = 1000): Column = name match {
-    case "ndvi" => ndvi(bands("nir"), bands("red"), scaleFactor)
-    case "nbr" => nbr(bands("nir"), bands("swir"), scaleFactor)
-    case "bsi" => bsi(bands("swir"), bands("red"), bands("nir"), bands("blue"), scaleFactor)
-    case "ndwi" => ndwi(bands("green"), bands("nir"), scaleFactor)
-    case other => throw new IllegalArgumentException(
-      s"$other is not a valid index name") // routines.py:122-123 parity
-  }
 }

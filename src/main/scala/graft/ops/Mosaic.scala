@@ -36,10 +36,4 @@ object Mosaic {
       .agg(min_by(col(valueCol), col("src_rank")).as(valueCol),
         min(col("src_rank")).as("src_rank"))
   }
-
-  /** A10 union extent over per-source bounds (raster.py:236-241). */
-  def extentUnion(withLonLat: DataFrame): DataFrame =
-    withLonLat.agg(
-      min("lon").as("lon_min"), min("lat").as("lat_min"),
-      max("lon").as("lon_max"), max("lat").as("lat_max"))
 }

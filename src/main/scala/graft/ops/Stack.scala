@@ -55,8 +55,4 @@ object Stack {
     geo.groupBy(col("cell")).agg(bands.head._2.as(bands.head._1),
       bands.tail.map { case (n, a) => a.as(n) }: _*)
   }
-
-  /** reorder_items analog: project bands in a new order. */
-  def reorder(stacked: DataFrame, order: Seq[String]): DataFrame =
-    stacked.select((col("cell") +: order.map(col)): _*)
 }

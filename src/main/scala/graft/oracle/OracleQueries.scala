@@ -519,7 +519,10 @@ object OracleQueries {
        |sh AS (SELECT DISTINCT id, shingle FROM sh0)""".stripMargin
   private val shChain: String = shChainFrom("corpus")
 
-  /** pairs (cand with id_a/id_b) -> exact jaccard (Dedup.jaccard). */
+  /** pairs (cand with id_a/id_b) -> exact jaccard over distinct
+    * shingle sets: the reference pair-join formulation (Dedup.jaccard),
+    * which Dedup.minhashLsh's per-document set verify and the
+    * ngramJaccard scoring both equal row for row. */
   private def jaccardTail(threshold: Double): String =
     s"""sizes AS (SELECT id, count(*) AS n FROM sh GROUP BY 1),
        |com AS (SELECT c.id_a, c.id_b, count(*) AS common FROM cand c
@@ -1014,7 +1017,7 @@ object OracleQueries {
 
     "q_lineage_resume" ->
       s"""${geoPrefixAnd(Res,
-        s"tiles AS (SELECT DISTINCT ${parentSql("cell", Res, Res - TileRes)} AS cell FROM enc)")}
+        s"tiles AS MATERIALIZED (SELECT DISTINCT ${parentSql("cell", Res, Res - TileRes)} AS cell FROM enc)")}
          |SELECT cell FROM tiles
          |WHERE (${compactSql(s"((cell % $Res58) >> 1)")}) % 2 = 1
          |ORDER BY cell""".stripMargin

@@ -266,8 +266,9 @@ object NearDupStream {
     * `Dedup.candidates(Dedup.bands(Dedup.minhash(...)))`): two docs
     * emit a candidate the moment they share any minhash band bucket
     * within the horizon. The minimal-state variant for pipelines that
-    * verify downstream against a doc store (batch Dedup.jaccard over
-    * the micro-batch sink); for in-stream exact Jaccard use
+    * verify downstream against a doc store (per-document shingle sets
+    * of the sink's candidate ids, `size(array_intersect)` per pair, as
+    * `Dedup.minhashLsh` verifies); for in-stream exact Jaccard use
     * [[minhashVerifiedPairs]]. Same state discipline as the simhash
     * stream. */
   def minhashCandidates(pages: DataFrame, idCol: String, textCol: String,

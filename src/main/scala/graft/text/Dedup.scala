@@ -219,50 +219,36 @@ object Dedup {
 
   /** Full MinHash-LSH near-dup pipeline: candidates verified by exact
     * Jaccard >= threshold. Returns (id_a, id_b, common, n_a, n_b,
-    * jaccard).
+    * jaccard), every row with common > 0.
     *
-    * Scale shape (round-2 rework of the round-1 "distinct everything
-    * first" pipeline, whose full-shingle-relation distinct shuffle
-    * dominated the query):
-    *  - the minhash path aggregates RAW shingle occurrences — min is
-    *    idempotent over duplicates, and the map-side partial min-agg
-    *    collapses each partition to numHashes longs per doc, so the
-    *    only shuffle on this path is tiny;
-    *  - the exact-Jaccard verify needs distinct shingle SETS, but only
-    *    for docs that appear in a candidate pair — the shingle relation
-    *    is semi-joined to the (small, LSH-pruned) candidate id set
-    *    BEFORE its distinct, so the big distinct shuffle shrinks from
-    *    |corpus shingles| to |candidate docs' shingles|.
+    * Precondition: `idCol` is a key of `df`, as every SparkEntry corpus
+    * guarantees; signatures and shingle sets are built per row.
+    *
+    * Scale shape — one code path, no Spark job while the plan builds:
+    *  - signatures come from the per-row `minhash_sigs` kernel: one
+    *    pass over the corpus, no occurrence explode, no groupBy-min
+    *    shuffle; banding and the bucket self-join follow;
+    *  - the verify builds each CANDIDATE document's shingle set with
+    *    the row kernel: the documents are semi-joined to the gated
+    *    candidate-id set, then `array_distinct(shingles)` gives one set
+    *    row per document — no explode, no aggregate, no shuffle besides
+    *    the semi-join. A set row is bounded by the text its own row
+    *    already carries. The gate caches the set relation when the
+    *    query runs; both pair joins read that cache through it
+    *    (shuffled over the budget) and score `size(array_intersect)`.
+    * [[jaccard]] over [[docShingles]] is the reference formulation the
+    * specs compare this one against, row for row.
     * Cache lifetime is the CALLER's (the returned plan references the
     * cached relations lazily); Verify/Bench clearCache between queries.
     */
-  /** Candidate-pair count below which the exact-Jaccard verify runs
-    * SET-BASED: per-candidate-doc shingle sets via collect_set (ONE
-    * map-side-combining shuffle of raw occurrences — replaces the
-    * distinct shuffle of the full candidate shingle relation), then
-    * two pair joins against the set relation and a per-pair array
-    * intersection. Measured at 800k docs / 160k pairs: verify tail
-    * 7.4 s -> 5.8 s at local[32], and at 100 TB the win is the
-    * shuffled BYTES — the shingle relation crosses the wire once, not
-    * three times. Above the limit, the pair-join formulation (jaccard)
-    * is the right plan: everything shuffles, nothing is driver-
-    * materialized, and per-row memory stays flat (no array rows).
-    * Both paths produce identical values (set semantics either way). */
-  val SetVerifyCandLimit = 200_000L
-
   def minhashLsh(df: DataFrame, idCol: String, textCol: String,
                  threshold: Double = 0.4, numHashes: Int = 8,
                  rowsPerBand: Int = 2, k: Int = 3,
                  maxBucket: Option[Int] = None,
-                 setVerifyLimit: Long = SetVerifyCandLimit,
                  salvageFactor: Option[Int] = None): DataFrame = {
-    val shAll = docShinglesAll(df, idCol, textCol, k)
-    // signatures via the per-row kernel (round-6): one pass over the
-    // corpus, no occurrence explode, no groupBy-min shuffle — md5 runs
-    // once per distinct in-document shingle+salt. Bit-identical to
-    // bands(minhash(shAll)) (DedupAnnSpec parity); docs shorter than k
-    // tokens produce an empty signature and drop, exactly like the
-    // aggregated path's absent row.
+    // docs shorter than k tokens produce an empty signature and drop,
+    // exactly like bands(minhash(docShinglesAll))'s absent row
+    // (bit-identical values, DedupAnnSpec parity)
     val sig = df.select(col(idCol).as("id"),
         graft.functions.minhash_sigs(col(textCol), k, numHashes).as("mh"))
       .filter(size(col("mh")) > 0)
@@ -271,51 +257,35 @@ object Dedup {
     val bnd = bands(sig, numHashes, rowsPerBand).cache()
     val cand = candidates(bnd, maxBucket, salvageFactor).cache()
     // no distinct: a semi-join right side tolerates duplicates, and the
-    // distinct would cost one more (tiny but scheduled) shuffle. The
-    // gate finds the cached cand already loaded by the count below.
+    // distinct would cost one more (tiny but scheduled) shuffle
     val candIds = GatePlans.gate(cand.select(col("id_a").as("id"))
       .union(cand.select(col("id_b").as("id"))))
-    // the count is over the CACHED cand, so it costs one traversal that
-    // the verify joins reuse
-    if (cand.count() <= setVerifyLimit) {
-      // cached: both pair joins read it, and the gate's measuring count
-      // loads it (caller-owned lifetime, the minhashLsh convention)
-      val sets = shAll.join(candIds, Seq("id"), "left_semi")
-        .groupBy("id").agg(collect_set(col("shingle")).as("ss"))
-        .select(col("id"), col("ss"), size(col("ss")).cast("long").as("n"))
-        .cache()
-      cand
-        .join(GatePlans.gate(sets.select(col("id").as("id_a"),
-          col("ss").as("ss_a"), col("n").as("n_a"))), Seq("id_a"))
-        .join(GatePlans.gate(sets.select(col("id").as("id_b"),
-          col("ss").as("ss_b"), col("n").as("n_b"))), Seq("id_b"))
-        .select(col("id_a"), col("id_b"),
-          size(array_intersect(col("ss_a"), col("ss_b"))).cast("long")
-            .as("common"), col("n_a"), col("n_b"))
-        .withColumn("jaccard",
-          col("common").cast("double") /
-            (col("n_a") + col("n_b") - col("common")).cast("double"))
-        // common > 0: the pair-join path's inner join on shared shingles
-        // never sees zero-overlap candidates, so without this filter the
-        // two count-selected paths would diverge at threshold <= 0
-        // (ADVICE r4 #2 — identical row sets on both paths, any threshold)
-        .filter(col("common") > 0 && col("jaccard") >= threshold)
-    } else {
-      val sh = shAll.join(candIds, Seq("id"), "left_semi")
-        .distinct().cache()
-      // normalized column order: identical schema on both verify paths
-      jaccard(cand, sh).filter(col("jaccard") >= threshold)
-        .select(col("id_a"), col("id_b"), col("common"),
-          col("n_a"), col("n_b"), col("jaccard"))
-    }
+    // not cached here: its plan holds the candIds gate, so a .cache()
+    // would measure cand while the plan is built. The gate caches it
+    // when the query runs; both pair joins then read that one cache
+    // (caller-owned lifetime, the minhashLsh convention).
+    val sets = GatePlans.gate(
+      df.select(col(idCol).as("id"), col(textCol).as("text"))
+        .join(candIds, Seq("id"), "left_semi")
+        .select(col("id"), array_distinct(shingles(col("text"), k)).as("ss"))
+        .select(col("id"), col("ss"), size(col("ss")).cast("long").as("n")))
+    cand
+      .join(sets.select(col("id").as("id_a"),
+        col("ss").as("ss_a"), col("n").as("n_a")), Seq("id_a"))
+      .join(sets.select(col("id").as("id_b"),
+        col("ss").as("ss_b"), col("n").as("n_b")), Seq("id_b"))
+      .select(col("id_a"), col("id_b"),
+        size(array_intersect(col("ss_a"), col("ss_b"))).cast("long")
+          .as("common"), col("n_a"), col("n_b"))
+      .withColumn("jaccard",
+        col("common").cast("double") /
+          (col("n_a") + col("n_b") - col("common")).cast("double"))
+      // common > 0: the reference jaccard joins on shared shingles and
+      // never sees zero-overlap candidates, so rows agree with it at
+      // any threshold, threshold <= 0 included
+      .filter(col("common") > 0 && col("jaccard") >= threshold)
   }
 
-  /** SimHash near-dup: 60-bit signatures (graft.text.SimHash via the
-    * codegen'd simhash60 expression), band-join on the 4 15-bit bands
-    * (Hamming <= 3 over 4 bands guarantees >= 1 identical band —
-    * standard pigeonhole blocking), verify exact Hamming.
-    * `maxBucket` caps band-bucket size before the quadratic self-join
-    * (same 100-TB guard as candidates/capBuckets; None = exact). */
   /** The (band, k0) struct array of a 60-bit signature column — the
     * SINGLE source of the band layout, shared by the batch pair join
     * and the streaming state keying (NearDupStream) so the two paths
@@ -346,6 +316,12 @@ object Dedup {
     maxHamming + 1
   }
 
+  /** SimHash near-dup: 60-bit signatures (graft.text.SimHash via the
+    * codegen'd simhash60 expression), band-join on the 4 15-bit bands
+    * (Hamming <= 3 over 4 bands guarantees >= 1 identical band —
+    * standard pigeonhole blocking), verify exact Hamming.
+    * `maxBucket` caps band-bucket size before the quadratic self-join
+    * (same 100-TB guard as candidates/capBuckets; None = exact). */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
                    maxHamming: Int = 3,
                    maxBucket: Option[Int] = None,

@@ -202,16 +202,13 @@ object Ann {
     (0 until dim).map(i => centroidWeight(c, i))
   }
 
-  /** Nearest-centroid cell of a quantized vector: score_c = |c|^2 −
-    * 2 c·v (the |v|^2 term is row-constant and drops out of the
-    * argmin), ties -> smaller id. One codegen'd kernel loop per row
+  /** Nearest + second-nearest centroid cells of a quantized vector as
+    * one packed int (cid1 << 8 | cid2): score_c = |c|^2 − 2 c·v (the
+    * |v|^2 term is row-constant and drops out of the argmin), ties ->
+    * smaller id. One codegen'd kernel loop per row
     * (graft.functions.IvfCells) — a least()+CASE Column formulation
     * re-inlines the 64-literal dot product per branch and trips
     * janino's 64KB limit into interpreted mode. */
-  def ivfCell(v: Column, dim: Int): Column =
-    shiftright(graft.functions.ivf_cells(v, dim), 8)
-
-  /** Nearest + second-nearest as one packed int (cid1 << 8 | cid2). */
   def ivfCells(v: Column, dim: Int): Column =
     graft.functions.ivf_cells(v, dim)
 

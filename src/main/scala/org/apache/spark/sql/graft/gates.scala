@@ -2,7 +2,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.{
-  BROADCAST, Filter, HintInfo, Join, JoinHint, LogicalPlan, Project, UnaryNode}
+  BROADCAST, Filter, HintInfo, Join, JoinHint, LogicalPlan, Project, UnaryNode, Union}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
@@ -24,10 +24,11 @@ import org.apache.spark.sql.DataFrame
  * The measurement ([[GatePlans.sizeInBytes]]): when the side reads a
  * cached relation that is not yet loaded, one count materializes it;
  * then the side's `stats.sizeInBytes` is read, which is exact for a
- * loaded `InMemoryRelation` (the builders cache their gated sides, so
- * the join reuses what the count loaded). A side with no cached leaf is
- * measured by the optimizer's estimate, the same test Spark's planner
- * applies.
+ * loaded `InMemoryRelation`. A side that computes more than a scan
+ * from cached relations is cached by the gate first
+ * ([[GatePlans.cachedSide]]), so the count loads what the join reads.
+ * A side with no cached leaf is measured by the optimizer's estimate,
+ * the same test Spark's planner applies.
  *
  * 100-TB note: this is why the gate exists at all — an unhinted join
  * under AQE still shuffle-WRITES the big side before the runtime size
@@ -51,9 +52,10 @@ case class BroadcastGate(child: LogicalPlan) extends UnaryNode {
 case class ResolveBroadcastGate(session: classic.SparkSession)
     extends Rule[LogicalPlan] {
 
-  /** The side with its marker removed, if it carries one. */
+  /** The side with its marker removed, if it carries one; the gated
+    * plan under any wrappers is read as [[GatePlans.cachedSide]]. */
   private def strip(side: LogicalPlan): Option[LogicalPlan] = side match {
-    case BroadcastGate(c) => Some(c)
+    case BroadcastGate(c) => Some(GatePlans.cachedSide(session, c))
     case p: Project => strip(p.child).map(s => p.copy(child = s))
     case f: Filter => strip(f.child).map(s => f.copy(child = s))
     case _ => None
@@ -86,8 +88,9 @@ object GatePlans {
   /** Wrap a join side in a deferred broadcast gate, installing
     * [[ResolveBroadcastGate]] on the side's session (idempotent; the
     * `experimental.extraOptimizations` hook attaches to a built
-    * session). Cache the side first when it is not a cheap scan: the
-    * measuring count then loads what the join reads. */
+    * session). A side that is not a cheap scan reads cached data: a
+    * cached relation, or a plan over one, which the gate caches when it
+    * resolves ([[cachedSide]]). */
   def gate(df: DataFrame): DataFrame = {
     val s = df.sparkSession.asInstanceOf[classic.SparkSession]
     install(s)
@@ -112,14 +115,41 @@ object GatePlans {
   private def optimized(s: classic.SparkSession, df: DataFrame): LogicalPlan =
     classic.Dataset.ofRows(s, df.queryExecution.analyzed).queryExecution.optimizedPlan
 
-  private def sizeInBytes(s: classic.SparkSession, plan: LogicalPlan): BigInt = {
-    val unloaded = plan.exists {
-      case m: InMemoryRelation => !m.cacheBuilder.isCachedColumnBuffersLoaded
-      case _ => false
+  private def unloaded(plan: LogicalPlan): Boolean = plan.exists {
+    case m: InMemoryRelation => !m.cacheBuilder.isCachedColumnBuffersLoaded
+    case _ => false
+  }
+
+  /** Projections, filters and unions of cached relations: reading the
+    * side again is a scan of the cache. */
+  private def scansCache(plan: LogicalPlan): Boolean = plan match {
+    case _: InMemoryRelation => true
+    case _: Project | _: Filter | _: Union => plan.children.forall(scansCache)
+    case _ => false
+  }
+
+  /** The gated side as the join reads it. A side that computes more
+    * than a scan from cached relations is itself cached here, at action
+    * time: the measuring count then loads the side the join reads, and
+    * the bytes measured are the side's own. An operator therefore hands
+    * the gate an uncached side whose plan holds gates of its own: a
+    * `.cache()` at build time would optimize that plan, and so run its
+    * measuring count, while the plan is built. Lifetime is the
+    * caller's, like any cache. */
+  private[graft] def cachedSide(s: classic.SparkSession, plan: LogicalPlan): LogicalPlan = {
+    val cm = s.sharedState.cacheManager
+    val side = cm.useCachedData(plan)
+    if (scansCache(side) || !side.exists(_.isInstanceOf[InMemoryRelation])) side
+    else {
+      cm.cacheQuery(classic.Dataset.ofRows(s, plan))
+      cm.useCachedData(plan)
     }
+  }
+
+  private def sizeInBytes(s: classic.SparkSession, plan: LogicalPlan): BigInt = {
     // a row count of the side's RDD with every column pruned: one job,
     // no aggregate stage, no column decoded (the cache still loads whole)
-    if (unloaded) classic.Dataset.ofRows(s, Project(Nil, plan)).queryExecution.toRdd.count()
+    if (unloaded(plan)) classic.Dataset.ofRows(s, Project(Nil, plan)).queryExecution.toRdd.count()
     // stats are memoized per node: a pre-load read would be the
     // estimate of the plan that was cached, not the loaded bytes
     plan.invalidateStatsCache()

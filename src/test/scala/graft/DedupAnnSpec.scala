@@ -66,29 +66,46 @@ class DedupAnnSpec extends AnyFunSuite with PropHelper {
     assert(!keys.exists(p => p._1 == 4L || p._2 == 4L))
   }
 
-  test("minhash verify: set-based fast path == pair-join fallback") {
-    // setVerifyLimit = 0 forces the shuffled pair-join formulation; the
-    // default takes the collect_set + broadcast + array_intersect path.
-    // Same candidates, same exact values either way.
+  test("minhash verify == reference pair-join jaccard, gated or shuffled") {
+    // the per-document set verify (array_distinct shingles +
+    // array_intersect) against the reference formulation: aggregated
+    // signatures, the same bands and candidates, and the shuffled
+    // pair-join jaccard over distinct (id, shingle) rows. Same rows, same
+    // exact values, at a real threshold and at -1.0 (zero-common
+    // candidates must be filtered, as the reference never emits them).
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => ((r.getAs[Long]("id_a"), r.getAs[Long]("id_b")),
           (r.getAs[Long]("common"), r.getAs[Long]("n_a"),
             r.getAs[Long]("n_b"), r.getAs[Double]("jaccard")))).toMap
-    def lsh(limit: Long = Dedup.SetVerifyCandLimit) =
-      Dedup.minhashLsh(docs, "doc_id", "text", 0.4, setVerifyLimit = limit)
-    val fast = rows(lsh())
-    val fallback = rows(lsh(0L))
-    assert(fast == fallback && fast.nonEmpty)
+    def lsh(t: Double) = Dedup.minhashLsh(docs, "doc_id", "text", t)
+    def reference(t: Double) = rows(Dedup.jaccard(
+        Dedup.candidates(Dedup.bands(Dedup.minhash(
+          Dedup.docShinglesAll(docs, "doc_id", "text")))),
+        Dedup.docShingles(docs, "doc_id", "text"))
+      .filter(col("jaccard") >= t))
+    for (t <- Seq(0.4, -1.0)) {
+      val got = rows(lsh(t))
+      assert(got == reference(t) && got.nonEmpty, s"threshold $t")
+      assert(got.values.forall(_._1 > 0), s"threshold $t: zero-common row")
+    }
     // the set relation's broadcast follows the gate: under the budget
-    // both pair joins are hinted; with broadcasts disabled the set path
+    // both pair joins are hinted; with broadcasts disabled the verify
     // runs shuffled — values identical again
-    assert(broadcastHints(lsh()) == 2)
+    assert(broadcastHints(lsh(0.4)) == 2)
+    // the gate caches the set relation when the query runs (it is not
+    // cached while the plan builds): both pair joins read that one cache
+    val setScans = lsh(0.4).queryExecution.optimizedPlan.collect {
+      case m: org.apache.spark.sql.execution.columnar.InMemoryRelation
+          if m.output.exists(_.name == "ss") => m.cacheBuilder
+    }
+    assert(setScans.size == 2 && setScans.distinct.size == 1, setScans)
     val shuffledSets = withBroadcastThreshold(-1) {
-      val df = lsh()
+      val df = lsh(0.4)
       assert(broadcastHints(df) == 0)
       rows(df)
     }
-    assert(shuffledSets == fast)
+    assert(shuffledSets == reference(0.4))
+    spark.catalog.clearCache()
   }
 
   test("simhash: identical docs at hamming 0; band join == brute force") {

@@ -134,14 +134,18 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(exchanges <= 2, s"expected <= 2 exchanges, got $exchanges:\n$p")
   }
 
-  test("minhash verify takes the set-based path at gate scale") {
-    // the shingle relation must cross the wire ONCE (map-side-combining
-    // collect_set) and the small set relation broadcast into the pair
-    // joins — not the distinct + two shuffle joins of the fallback
+  test("minhash verify builds per-document shingle sets, broadcast into " +
+       "the pair joins") {
+    // one set row per candidate document from the row kernel
+    // (array_distinct over the shingles): no collect_set aggregate, and
+    // the small set relation broadcast into both pair joins at gate
+    // scale
     val p = plan("q_minhash_lsh")
-    assert(p.contains("collect_set"), s"set-based verify not taken:\n$p")
-    assert(p.contains("BroadcastHashJoin"),
-      s"set relation not broadcast into the pair joins:\n$p")
+    assert(!p.contains("collect_set"), s"aggregated shingle sets:\n$p")
+    assert(p.contains("array_distinct"), s"per-row set kernel missing:\n$p")
+    for (side <- Seq("id_a", "id_b"))
+      assert(raw"BroadcastHashJoin \[$side#\d+L?\]".r.findFirstIn(p).isDefined,
+        s"set relation not broadcast into the $side pair join:\n$p")
   }
 
   test("semi-points cell fallback: equi-join candidates, no cross product") {
@@ -164,18 +168,12 @@ class PlanShapeSpec extends AnyFunSuite {
   val buildsWithJobs: Map[String, String] = {
     val cc = "iterative connected components: Dedup.clusters runs its " +
       "label-propagation rounds while it builds"
-    val minhash = "minhashLsh counts its cached candidate pairs to pick " +
-      "the set-based or the pair-join verify"
     Map(
       "q_dedup_clusters" -> cc,
       "q_dedup_e2e" -> cc,
       "q_clean_corpus" -> cc,
       "q_knn" -> ("iterative ring expansion: Knn.knnJoin runs its rounds " +
         "and collects finished query ids while it builds"),
-      "q_minhash_lsh" -> minhash,
-      "q_minhash_wide" -> minhash,
-      "q_minhash_capped" -> minhash,
-      "q_minhash_salvaged" -> minhash,
       "q_embed_knn" -> ("cosineTopK measures its query side to size the " +
         "chunk count of its cross-join loop"),
       "q_class_edit" -> ("Extract.addClass collects the label statistics " +
