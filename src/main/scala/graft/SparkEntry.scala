@@ -48,8 +48,9 @@ object SparkEntry {
         count(lit(1)).as("n_rows"))
       .orderBy("l_returnflag", "l_linestatus")
 
-  /** Broadcast equi-join + exact-cents agg (J-class anchor; money kept
-    * in integer cents so the sum is order-independent).
+  /** Equi-join + exact-cents agg (J-class anchor; money kept in
+    * integer cents so the sum is order-independent). The planner
+    * broadcasts orders by its own size estimate; no hint forces it.
     * Two-phase distinct: lineitem pre-aggregates on its own join key
     * (one shuffle of ~N/4 two-column rows), so the countDistinct
     * expand — which doubled every lineitem row through two aggregate
@@ -62,7 +63,7 @@ object SparkEntry {
       sum(round(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100)
         .cast("long")).as("cents"),
       count(lit(1)).as("n"))
-    perOrder.join(broadcast(o), perOrder("l_orderkey") === o("o_orderkey"))
+    perOrder.join(o, perOrder("l_orderkey") === o("o_orderkey"))
       .groupBy("o_orderpriority")
       .agg(
         sum("cents").as("revenue_cents"),
@@ -523,10 +524,10 @@ object SparkEntry {
       .orderBy("label_id")
   }
 
-  // ---- kNN (ring expansion) -----------------------------------------------
+  // ---- kNN (page-count radius) --------------------------------------------
 
-  /** Cell-ring-expansion kNN join: 25 nation query points x pages,
-    * k=5, exact (disk-guarantee + brute-force residue). */
+  /** kNN join: 25 nation query points x pages, k=5, exact (per-query
+    * page-count radius + brute-force residue). */
   def qKnn(spark: SparkSession, dir: String): DataFrame = {
     val points = Points.fromTable(spark, dir, "nation", "n_nationkey", Nil, "n")
       .select(col("pid").as("qid"), col("lon").as("qlon"), col("lat").as("qlat"))

@@ -98,23 +98,25 @@ object CellIndex {
   /**
    * Disk of cells with Chebyshev distance <= k (kRing analog).
    * Longitude wraps (the grid is periodic in x); latitude clamps
-   * (cells past a pole are dropped). Returned sorted ascending for
+   * (cells past a pole are dropped). Each cell appears once, also when
+   * the disk is wider than the grid. Returned sorted ascending for
    * deterministic downstream plans.
    */
   def disk(cell: Long, k: Int): Array[Long] = {
     val r = resolution(cell)
     val n = 1L << r
     val cx = xOf(cell); val cy = yOf(cell)
+    val width = math.min(2L * k + 1, n) // one full wrap at most
     val out = scala.collection.mutable.ArrayBuffer.empty[Long]
     var dy = -k
     while (dy <= k) {
       val y = cy + dy
       if (y >= 0L && y < n) {
-        var dx = -k
-        while (dx <= k) {
-          val x = java.lang.Math.floorMod(cx + dx, n)
+        var i = 0L
+        while (i < width) {
+          val x = java.lang.Math.floorMod(cx - k + i, n)
           out += fromXY(x, y, r)
-          dx += 1
+          i += 1
         }
       }
       dy += 1

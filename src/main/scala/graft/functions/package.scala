@@ -31,8 +31,11 @@ package object functions {
 
   def cell_children(cell: Column): Column = toCol(CellChildren(toExpr(cell)))
 
-  def cell_disk(cell: Column, k: Int): Column =
-    toCol(CellDisk(toExpr(cell), toExpr(lit(k))))
+  def cell_disk(cell: Column, k: Int): Column = cell_disk(cell, lit(k))
+
+  /** Disk with a per-row radius (an int column). */
+  def cell_disk(cell: Column, k: Column): Column =
+    toCol(CellDisk(toExpr(cell), toExpr(k)))
 
   def cell_ring(cell: Column, k: Int): Column =
     toCol(CellRing(toExpr(cell), toExpr(lit(k))))

@@ -48,18 +48,18 @@ object Extract {
     * with a fresh label id = max+1 and the max existing class count
     * (A9). `value` must match the band columns' type (e.g. `lit(9999L)`
     * for Long bands — a mismatched literal would widen the whole column
-    * through the union). The stats collect is one row over the label
-    * histogram — labels are small by contract. */
+    * through the union). The synthetic rows come from the one-row
+    * label statistics (`explode(sequence(1, max_n))`), so building the
+    * plan runs no job; an empty `xy` has null statistics and adds no
+    * rows. */
   def addClass(xy: DataFrame, bands: Seq[String], value: org.apache.spark.sql.Column,
                classname: String): DataFrame = {
-    val spark = xy.sparkSession
-    val stats = xy.groupBy("label_id").agg(count(lit(1)).as("n"))
-      .agg(max("label_id").as("max_id"), max("n").as("max_n")).collect()(0)
-    val newId = stats.getAs[Long]("max_id") + 1
-    val n = stats.getAs[Long]("max_n")
-    val synth = spark.range(n)
+    val synth = labelHistogram(xy)
+      .agg(max("label_id").as("max_id"), max("n").as("max_n"))
+      .select(explode(sequence(lit(1L), col("max_n"))).as("_i"),
+        (col("max_id") + 1).as("label_id"))
       .select(bands.map(b => value.as(b)) ++
-        Seq(lit(classname).as("classname"), lit(newId).as("label_id")): _*)
+        Seq(lit(classname).as("classname"), col("label_id")): _*)
     xy.unionByName(synth, allowMissingColumns = true)
   }
 

@@ -87,6 +87,9 @@ class CellIndexSpec extends AnyFunSuite with PropHelper {
     val d2 = CellIndex.disk(nearAnti, 1)
     assert(d2.length == 9) // wrapped, not clipped
     assert(d2.exists(c => CellIndex.xOf(c) == (1L << 8) - 1))
+    // a disk wider than the grid (8 x 8 cells at res 3) holds each cell once
+    val whole = CellIndex.disk(CellIndex.encode(0.0, 0.0, 3), 16)
+    assert(whole.length == 64 && whole.distinct.length == 64)
   }
 
   test("coverRect covers exactly the index ranges") {

@@ -312,19 +312,82 @@ class DedupAnnSpec extends AnyFunSuite with PropHelper {
     assert(out != null && out.count() == 0L)
   }
 
+  /** Driver-side brute-force kNN: (qid, rank, id, dist2) by (dist2, id). */
+  private def bruteKnn(pts: Seq[(Long, Double, Double)],
+                       pages: Seq[(Long, Double, Double)], k: Int) =
+    pts.flatMap { case (q, qlon, qlat) =>
+      pages.map { case (id, lon, lat) =>
+        ((lon - qlon) * (lon - qlon) + (lat - qlat) * (lat - qlat), id)
+      }.sortBy(identity)(Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
+        .take(k).zipWithIndex.map { case ((d, id), i) => (q, i + 1, id, d) }
+    }.sortBy(t => (t._1, t._2))
+
+  private def knnDf(pts: Seq[(Long, Double, Double)],
+                    pages: Seq[(Long, Double, Double)], res: Int, k: Int,
+                    maxRadius: Int) =
+    graft.ops.Knn.knnJoin(pts.toDF("qid", "qlon", "qlat"),
+      pages.toDF("id", "lon", "lat")
+        .withColumn("cell", graft.functions.cell_of($"lon", $"lat", res)),
+      res, k, maxRadius)
+
+  private def knnRows(pts: Seq[(Long, Double, Double)],
+                      pages: Seq[(Long, Double, Double)], res: Int, k: Int,
+                      maxRadius: Int) =
+    knnDf(pts, pages, res, k, maxRadius).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+      .toSeq.sortBy(t => (t._1, t._2))
+
+  test("knnJoin == driver-side brute-force top-k (clustered, uniform, antimeridian/pole pages)") {
+    val rnd = new scala.util.Random(11)
+    val centers = Seq((10.0, 45.0), (-70.0, -20.0), (120.0, 30.0))
+    val clustered = (0 until 150).map { i =>
+      val (lon, lat) = centers(i % 3)
+      (i.toLong, lon + rnd.nextGaussian(), lat + rnd.nextGaussian())
+    }
+    val uniform = (0 until 150).map { i =>
+      (1000L + i, rnd.nextDouble() * 360 - 180, rnd.nextDouble() * 180 - 90)
+    }
+    val edges = (0 until 60).map { i =>
+      val off = rnd.nextDouble() * 0.5
+      val (lon, lat) = i % 4 match {
+        case 0 => (180.0 - off, rnd.nextDouble() * 20 - 10)
+        case 1 => (-180.0 + off, rnd.nextDouble() * 20 - 10)
+        case 2 => (rnd.nextDouble() * 360 - 180, 90.0 - off)
+        case _ => (rnd.nextDouble() * 360 - 180, -90.0 + off)
+      }
+      (2000L + i, lon, lat)
+    } ++ Seq((2100L, 180.0, 0.0), (2101L, -180.0, 0.0), (2102L, 0.0, 90.0), (2103L, 0.0, -90.0))
+    // at +-180, at the poles, in clusters, and in empty regions
+    val pts = Seq((0L, 180.0, 0.0), (1L, -180.0, 5.0), (2L, 0.0, 90.0),
+      (3L, 30.0, -90.0), (4L, 10.5, 44.5), (5L, -70.0, -21.0),
+      (6L, -30.0, -60.0), (7L, 150.0, -45.0), (8L, 121.0, 31.0), (9L, -100.0, 70.0))
+    val fixtures = Map("clustered" -> clustered, "uniform" -> uniform, "edges" -> edges)
+    // every res, k and maxRadius with every fixture, in 12 runs
+    val cases = Seq(
+      ("clustered", 8, 3, 16), ("uniform", 8, 7, 2), ("edges", 8, 1, 16), ("clustered", 8, 7, 0),
+      ("uniform", 6, 3, 16), ("edges", 6, 7, 2), ("clustered", 6, 1, 2), ("edges", 6, 3, 0),
+      ("uniform", 3, 1, 0), ("edges", 3, 3, 16), ("clustered", 3, 7, 16), ("uniform", 3, 7, 2))
+    for ((name, res, k, maxRadius) <- cases) {
+      val pages = fixtures(name)
+      assert(knnRows(pts, pages, res, k, maxRadius) == bruteKnn(pts, pages, k),
+        s"$name res=$res k=$k maxRadius=$maxRadius")
+    }
+    spark.catalog.clearCache()
+  }
+
   test("knn relational bookkeeping path == driver IN-list path") {
-    val pts = (0L until 6L).map(i => (i, -10.0 + i * 4.0, 5.0 + i))
-      .toDF("qid", "qlon", "qlat")
+    // The per-query bookkeeping (radius per qid, residue of unresolved
+    // qids) is relational only; the driver-side IN-list it once had is
+    // gone. On the fixture that compared the two, the relational plan
+    // must still give the driver-computed top-k, at 6 and 60 queries.
     val pages = (0L until 400L).map { i =>
       val rnd = new scala.util.Random(i)
       (i, rnd.nextDouble() * 60 - 30, rnd.nextDouble() * 40 - 10)
-    }.toDF("id", "lon", "lat")
-      .withColumn("cell", graft.functions.cell_of($"lon", $"lat", 8))
-    def run(maxDriver: Int) = graft.ops.Knn.knnJoin(pts, pages, 8, 3,
-        maxDriverQids = maxDriver)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-      .sortBy(t => (t._1, t._2)).toSeq
-    assert(run(0) == run(1000)) // 0 forces the semi/anti-join formulation
+    }
+    for (n <- Seq(6L, 60L)) {
+      val pts = (0L until n).map(i => (i, -10.0 + (i % 6) * 4.0 + i / 6, 5.0 + i % 6))
+      assert(knnRows(pts, pages, 8, 3, 16) == bruteKnn(pts, pages, 3), s"queries=$n")
+    }
   }
 
   test("ivfTopK == driver-side mirror (assign -> 2-probe -> exact top-k)") {
@@ -654,54 +717,31 @@ class DedupAnnSpec extends AnyFunSuite with PropHelper {
     }
   }
 
-  test("knn probe cap: early brute-force fallback stays exact") {
-    val pts = (0L until 6L).map(i => (i, -10.0 + i * 4.0, 5.0 + i))
-      .toDF("qid", "qlon", "qlat")
+  test("knn brute-force residue: exact, and chunked to the broadcast budget") {
+    val near = (0L until 6L).map(i => (i, -10.0 + i * 4.0, 5.0 + i))
+    val far = (6L until 10L).map(i => (i, -185.0 + i, -89.0)) // far from every page
     val pages = (0L until 400L).map { i =>
       val rnd = new scala.util.Random(i)
       (i, rnd.nextDouble() * 60 - 30, rnd.nextDouble() * 40 - 10)
-    }.toDF("id", "lon", "lat")
-      .withColumn("cell", graft.functions.cell_of($"lon", $"lat", 8))
-    def run(cap: Long) = graft.ops.Knn.knnJoin(pts, pages, 8, 3,
-        maxProbeRows = cap)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-      .sortBy(t => (t._1, t._2)).toSeq
-    // cap 1: zero ring-expansion rounds run — 6 x (2*4+1)^2 = 486 probe
-    // rows already exceed it, so everything goes straight to the exact
-    // brute-force pass; results must be identical to the default path
-    val exact = run(graft.ops.Knn.MaxProbeRows)
-    assert(run(1L) == exact)
-    // the brute-force residue is the chunked broadcast loop: a tiny
-    // budget splits it, a non-positive threshold sizes chunks by Spark's
-    // default budget (one chunk) — exact either way
-    def brute = graft.ops.Knn.knnJoin(pts, pages, 8, 3, maxProbeRows = 1L)
-    assert(joins(brute) == 1)
+    }
+    val pts = near ++ far
+    val exact = bruteKnn(pts, pages, 3)
+    // maxRadius 0 sends every query with fewer than k pages in its own
+    // cell to the residue; maxRadius 2 still leaves the far ones there
+    for (maxRadius <- Seq(0, 2)) assert(knnRows(pts, pages, 8, 3, maxRadius) == exact)
+    // the residue is the chunked broadcast cross join: a tiny budget
+    // splits it, a non-positive threshold sizes chunks by Spark's default
+    // budget (one chunk); exact either way
+    def crossJoins = knnDf(pts, pages, 8, 3, 0).queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join if j.condition.isEmpty => j
+    }.size
+    assert(crossJoins == 1)
     for ((t, many) <- Seq(64 -> true, 0 -> false, -1 -> false))
       withBroadcastThreshold(t) {
-        assert((joins(brute) > 1) == many, s"threshold $t")
-        assert(run(1L) == exact, s"threshold $t")
+        assert((crossJoins > 1) == many, s"threshold $t")
+        assert(knnRows(pts, pages, 8, 3, 0) == exact, s"threshold $t")
       }
-    // measured, not asserted: the cap strictly reduces probe rows on an
-    // adversarial sparse fixture (queries in empty regions force the
-    // full ring ladder without a cap)
-    val farPts = (0L until 4L).map(i => (i, -179.0 + i, -89.0))
-      .toDF("qid", "qlon", "qlat") // far from every page
-    def probeCount(cap: Long): Long = {
-      val acc = spark.sparkContext.longAccumulator(s"knn_probe_$cap")
-      graft.ops.Knn.knnJoin(farPts, pages, 8, 3, maxProbeRows = cap,
-        probeRows = Some(acc)).count()
-      acc.value
-    }
-    val unCapped = probeCount(graft.ops.Knn.MaxProbeRows)
-    val capped = probeCount(500L) // engages after the first round
-    assert(unCapped > capped,
-      s"cap did not reduce probe rows: $unCapped vs $capped")
-    // and the capped run is still exact
-    def res(cap: Long) = graft.ops.Knn.knnJoin(farPts, pages, 8, 3,
-        maxProbeRows = cap)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-      .sortBy(t => (t._1, t._2)).toSeq
-    assert(res(500L) == res(graft.ops.Knn.MaxProbeRows))
+    spark.catalog.clearCache()
   }
 
   test("multi-probe lsh: candidate pool is a superset of single-bucket") {

@@ -18,7 +18,27 @@ class PlanShapeSpec extends AnyFunSuite {
   test("dim-side joins are broadcast (no shuffle of the big side)") {
     assert(plan("q_tpch_join").contains("BroadcastHashJoin"))
     assert(plan("q_extract").contains("BroadcastHashJoin"))
-    assert(plan("q_knn") != null) // driver-loop; probe side broadcast per round
+  }
+
+  test("knn probe join is an equi-join on cell through the broadcast gate") {
+    import org.apache.spark.sql.execution.joins.{
+      BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec}
+    def physical = SparkEntry.queries("q_knn")(spark, sfDir).queryExecution.sparkPlan
+    // the probe join: pages (id) meet the exploded queries (qid) on cell
+    def probeJoins(p: org.apache.spark.sql.execution.SparkPlan) = p.collect {
+      case j: BroadcastHashJoinExec if j.leftKeys.exists(_.references.exists(_.name == "cell")) &&
+          Set("id", "qid").subsetOf(j.output.map(_.name).toSet) => j
+    }
+    val p = physical
+    assert(probeJoins(p).size == 1, s"probe join not broadcast on cell:\n$p")
+    // the one nested-loop join is the brute-force residue's one chunk
+    assert(p.collect { case j: BroadcastNestedLoopJoinExec => j }.size == 1, p.toString)
+    assert(p.collect { case j: CartesianProductExec => j }.isEmpty, p.toString)
+    // gated, not forced: with broadcasts disabled the probe join shuffles
+    SparkSessionHelper.withBroadcastThreshold(-1) {
+      assert(probeJoins(physical).isEmpty)
+    }
+    spark.catalog.clearCache()
   }
 
   test("extract points broadcast is byte-gated (both sides of the gate)") {
@@ -172,12 +192,10 @@ class PlanShapeSpec extends AnyFunSuite {
       "q_dedup_clusters" -> cc,
       "q_dedup_e2e" -> cc,
       "q_clean_corpus" -> cc,
-      "q_knn" -> ("iterative ring expansion: Knn.knnJoin runs its rounds " +
-        "and collects finished query ids while it builds"),
+      "q_knn" -> ("Knn.knnJoin measures its brute-force residue while it " +
+        "builds, to size the chunks of its broadcast cross join"),
       "q_embed_knn" -> ("cosineTopK measures its query side to size the " +
         "chunk count of its cross-join loop"),
-      "q_class_edit" -> ("Extract.addClass collects the label statistics " +
-        "that size the synthetic class"),
       "q_overlap_pairing" -> ("the filename pairing checkpoints its " +
         "range-partitioned listing and collects per-partition row counts " +
         "to offset its ranks"))
