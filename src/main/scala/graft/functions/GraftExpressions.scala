@@ -308,13 +308,13 @@ object veckernels {
 }
 
 /**
- * ivf_cells(v): nearest and second-nearest IVF centroid of a quantized
+ * IVF cells: nearest and second-nearest centroid of a quantized
  * vector, packed as (cid1 << 8) | cid2 — ONE kernel loop over a
- * reference-object centroid matrix. The Column-combinator formulation
- * (least() over 16 scores + first-match CASE chains, each re-inlining a
- * 64-literal dot product) blows janino's 64KB method limit and silently
- * drops the whole stage to interpreted mode — the exact round-1
- * CellInRanges failure shape, same fix.
+ * reference-object centroid matrix (IvfCellsOf). The Column-combinator
+ * formulation (least() over 16 scores + first-match CASE chains, each
+ * re-inlining a 64-literal dot product) blows janino's 64KB method
+ * limit and silently drops the whole stage to interpreted mode — the
+ * exact round-1 CellInRanges failure shape, same fix.
  *
  * Argmin semantics (bit-matched by the oracle's least+CASE SQL):
  * score_c = |c|^2 - 2 c.v (exact Long), ties -> smaller centroid id;
@@ -345,36 +345,13 @@ object ivfkernel {
   }
 }
 
-case class IvfCells(child: Expression, dim: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def dataType: DataType = IntegerType
-  override def inputTypes = Seq(ArrayType(LongType))
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "ivf_cells"
-  @transient private lazy val cents: Array[Array[Long]] =
-    (0 until graft.vector.Ann.NumCentroids)
-      .map(c => graft.vector.Ann.centroidArray(c, dim).toArray).toArray
-  @transient private lazy val norms: Array[Long] =
-    cents.map(_.map(x => x * x).sum)
-  protected override def nullSafeEval(v: Any): Any =
-    ivfkernel.cells(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      cents, norms)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("ivfCents", cents, "long[][]")
-    val nRef = ctx.addReferenceObj("ivfNorms", norms, "long[]")
-    defineCodeGen(ctx, ev, v =>
-      s"graft.functions.ivfkernel.cells($v, $cRef, $nRef)")
-  }
-  override protected def withNewChildInternal(c: Expression): IvfCells =
-    copy(child = c)
-}
-
-/** ivf_cells_of(v, codebook): same packed nearest + second-nearest
-  * argmin as IvfCells, but over an EXPLICIT centroid matrix (the
-  * trained-codebook path — Ann.trainCodebook's k-means output feeds the
-  * same kernel through a reference object; the LCG table stays the
-  * oracle-gated default). `codebook` is a Seq (not Array) so case-class
-  * equality stays structural for plan canonicalization. */
+/** ivf_cells_of(v, codebook): the packed nearest + second-nearest
+  * argmin (ivfkernel) over a centroid matrix held as a reference
+  * object — the ONE IVF kernel: the LCG table (Ann.lcgCodebook, the
+  * oracle-gated default and the SQL `ivf_cells` function) and a trained
+  * codebook (Ann.trainCodebook's k-means output) both go through it.
+  * `codebook` is a Seq (not Array) so case-class equality stays
+  * structural for plan canonicalization. */
 case class IvfCellsOf(child: Expression, codebook: Seq[Seq[Long]])
     extends UnaryExpression with ExpectsInputTypes {
   override def dataType: DataType = IntegerType

@@ -81,9 +81,10 @@ package object functions {
   /** Quantize a float-array column to long (trunc(x * 10000)). */
   def quantize_q(v: Column): Column = toCol(QuantizeQ(toExpr(v)))
 
-  /** Nearest + second-nearest IVF centroid, packed (cid1 << 8) | cid2
-    * (one kernel loop; see IvfCells). */
-  def ivf_cells(v: Column, dim: Int): Column = toCol(IvfCells(toExpr(v), dim))
+  /** Nearest + second-nearest IVF centroid over the LCG codebook,
+    * packed (cid1 << 8) | cid2 (one kernel loop; see IvfCellsOf). */
+  def ivf_cells(v: Column, dim: Int): Column =
+    ivf_cells_of(v, graft.vector.Ann.lcgCodebook(dim))
 
   /** Same, over an explicit (trained) centroid matrix. */
   def ivf_cells_of(v: Column, codebook: Seq[Seq[Long]]): Column =
@@ -127,8 +128,8 @@ package object functions {
     "dot_q" -> (e => DotQ(e(0), e(1))),
     "quantize_q" -> (e => QuantizeQ(e.head)),
     // dim must be a foldable literal (it sizes the centroid table)
-    "ivf_cells" -> (e => IvfCells(e(0),
-      e(1).eval().asInstanceOf[Number].intValue))
+    "ivf_cells" -> (e => IvfCellsOf(e(0),
+      graft.vector.Ann.lcgCodebook(e(1).eval().asInstanceOf[Number].intValue)))
   )
 
   /** Register the scalar functions on an existing session. */

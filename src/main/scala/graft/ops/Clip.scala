@@ -10,33 +10,25 @@ import graft.geo.Polygon
 /**
  * Clip operators (SURVEY.md S3/S4; geoRpro raster.py:359-422).
  *
- * Both clips are *prefilter + exact refine* so the cheap part pushes
- * down to the scan:
+ * Both clips are *prefilter + exact refine*, so the exact test runs on
+ * few rows:
  *  - the coarse-cover prefilter turns into a set of contiguous
- *    descendant cell-id RANGES (`cell BETWEEN lo AND hi OR ...`) —
- *    range predicates on the sort/partition column reach parquet
- *    min/max stats (the load_window pushdown analog, raster.py:388-392);
+ *    descendant cell-id RANGES, tested with one codegen'd binary search
+ *    per row (`cell_in_ranges`). Every caller derives `cell` from
+ *    lon/lat, so there is no stored column for parquet min/max stats to
+ *    prune on; range pushdown on a STORED cell column is
+ *    TileStore.scanCover's job (the load_window pushdown analog,
+ *    raster.py:388-392);
  *  - the exact residual predicate (box bounds / ray-casting PIP) runs
  *    codegen'd on the surviving rows only.
  */
 object Clip {
 
-  /** Above this many merged ranges the prefilter switches from an
-    * OR-of-BETWEEN disjunction (parquet min/max pushdown-friendly on a
-    * STORED cell column) to one binary-search probe (`cell_in_ranges`).
-    * The disjunction re-inlines the cell expression per disjunct when
-    * `cell` is derived, so large covers would blow janino's 64KB
-    * method limit and silently fall back to interpreted eval. */
-  val MaxDisjuncts = 12
-
-  /** Cover prefilter predicate for a set of coarse cover cells. */
-  def coverRangePredicate(cellCol: Column, cover: Array[Long], res: Int): Column = {
-    val flat = CellIndex.coverRanges(cover, res)
-    if (flat.length / 2 <= MaxDisjuncts)
-      flat.grouped(2).map { case Array(lo, hi) => cellCol.between(lo, hi) }
-        .reduce(_ || _)
-    else cell_in_ranges(cellCol, flat)
-  }
+  /** Cover prefilter predicate for a set of coarse cover cells: one
+    * binary-search probe over the merged descendant ranges
+    * (`cell_in_ranges`), whatever the number of ranges. */
+  def coverRangePredicate(cellCol: Column, cover: Array[Long], res: Int): Column =
+    cell_in_ranges(cellCol, CellIndex.coverRanges(cover, res))
 
   /** S3 `load_window`: rectangular clip. `res` = resolution of the
     * `cell` column; coverRes = coarse prefilter resolution. */

@@ -569,11 +569,12 @@ object OracleQueries {
     val keyEq = ((0 until rowsPerBand).map(r => s"a.k$r = b.k$r") ++
       (if (salvageFactor.isDefined) Seq("a.ksub = b.ksub") else Nil))
       .mkString(" AND ")
-    // cap-aware: replay capBuckets (count ids per band bucket, drop
-    // whole buckets above the cap) — or, with salvageFactor, the full
-    // three-tier capBucketsSalvage policy including the md5-salted
-    // sub-bucket assignment (trunc() around the int division: DuckDB
-    // CAST rounds where Spark cast truncates)
+    // cap-aware: replay Dedup.capBuckets — a cap alone is its factor-1
+    // keep/drop tier (count ids per band bucket, drop whole buckets
+    // above the cap; the always-0 ksub is left out), with salvageFactor
+    // the full three-tier policy including the md5-salted sub-bucket
+    // assignment (trunc() around the int division: DuckDB CAST rounds
+    // where Spark cast truncates)
     val keyCols = "band" +: (0 until rowsPerBand).map(r => s"k$r")
     val bandsSz =
       s"""bandsz AS (SELECT ${keyCols.mkString(", ")}, count(*) AS n

@@ -90,15 +90,14 @@ object WorkflowJson {
     // an unsupported one fails fast at compile time (ADVICE r3 #1 —
     // a fixed 4-band blocking silently under-deleted at maxHamming>=4)
     // optional scale knobs: maxBucket (band-bucket cap) and
-    // salvageFactor (sub-bucket salvage tier; requires maxBucket)
+    // salvageFactor (sub-bucket salvage tier; requires maxBucket —
+    // Dedup.applyBucketPolicy raises it while the task compiles)
     "dedup_near" -> { (p, df) =>
       val id = req(p, "id").asText; val text = req(p, "text").asText
       val mh = if (p.has("maxHamming")) req(p, "maxHamming").asInt else 3
       val mb = if (p.has("maxBucket")) Some(req(p, "maxBucket").asInt) else None
       val sf = if (p.has("salvageFactor")) Some(req(p, "salvageFactor").asInt)
                else None
-      require(sf.isEmpty || mb.isDefined,
-        "dedup_near: salvageFactor requires maxBucket")
       graft.text.Dedup.keepClusterKeepers(df, id,
         graft.text.Dedup.simhashPairs(df, id, text, mh, mb, sf))
     },
@@ -127,8 +126,6 @@ object WorkflowJson {
       val salvage =
         if (p.has("salvageFactor")) Some(req(p, "salvageFactor").asInt)
         else None
-      require(salvage.isEmpty || maxBucket.isDefined,
-        "embed_neardup: salvageFactor requires maxBucket")
       val corpus = df.select(col(id).as("id"),
         graft.vector.Ann.quantize(col(vec)).as("v"))
       val pairs = graft.vector.Ann.cosineNearDupBanded(corpus,

@@ -12,12 +12,14 @@ import org.apache.spark.util.LongAccumulator
  * graft.vector.Ann.bandedCandidates / cosineNearDupBanded).
  * Beyond-reference (the reference is batch-only).
  *
- * Shape: each page's signature (the SAME kernels as batch) explodes
- * into its pigeonhole band keys; state lives PER BAND BUCKET
- * (flatMapGroupsWithState keyed by (band, key)) and holds one ENTRY
- * per page seen in that bucket within the pairing horizon: its id,
- * event time, and the family's VERIFY PAYLOAD — the 60-bit simhash
- * signature, the distinct shingle set, or the quantized embedding.
+ * Shape: each page's signature (the SAME kernels and band splitters as
+ * batch: minhash_sigs with Dedup.bands, Dedup.bitBands for the simhash
+ * and hyperplane bits) explodes into its band keys; state lives PER
+ * BAND BUCKET (flatMapGroupsWithState keyed by (band, key)) and holds
+ * one ENTRY per page seen in that bucket within the pairing horizon:
+ * its id, event time, and the family's VERIFY PAYLOAD — the 60-bit
+ * simhash signature, the distinct shingle set, or the quantized
+ * embedding.
  * Because the payload rides the state, every family verifies
  * IN-STREAM (VERDICT r4 next #1 — the simhash pattern generalized):
  * an arriving page emits one verified pair row per qualifying state
@@ -48,13 +50,13 @@ import org.apache.spark.util.LongAccumulator
  *    when the cap is eating recall);
  *  - SALVAGE: `subBuckets > 1` splits every bucket into md5-salted
  *    sub-buckets BEFORE keying (the streaming analog of the batch
- *    three-tier salvage policy, Dedup.capBucketsSalvage: same salt —
- *    first md5 word of the id's decimal string, mod subBuckets — so a
- *    hot bucket's state and emission drop ~subBuckets× while every
- *    sampled pair still verifies exactly). Batch salvage derives the
- *    sub-bucket count from the measured bucket size; a stream can't
- *    see the future, so the caller picks a STATIC fan-out sized to the
- *    expected hot-bucket mass. A sub-bucketed stream equals the batch
+ *    three-tier salvage policy, Dedup.capBuckets: same salt,
+ *    Dedup.subBucket — first md5 word of the id's decimal string, mod
+ *    subBuckets — so a hot bucket's state and emission drop
+ *    ~subBuckets× while every sampled pair still verifies exactly).
+ *    Batch salvage derives the sub-bucket count from the measured
+ *    bucket size; a stream can't see the future, so the caller picks a
+ *    STATIC fan-out sized to the expected hot-bucket mass. A sub-bucketed stream equals the batch
  *    salvage candidates of any bucket whose ceil(n/cap) matches.
  */
 object NearDupStream {
@@ -161,18 +163,17 @@ object NearDupStream {
   private val NullStrs: Column = lit(null).cast("array<string>")
 
   /** Streaming salvage tier: split every band bucket into `subBuckets`
-    * md5-salted sub-buckets by amending the key — the EXACT batch
-    * sub-bucket salt (Dedup.capBucketsSalvage: pmod of the first md5
-    * word of the id's decimal string), so a stream with subBuckets = n
-    * pairs exactly like a batch salvaged bucket whose ceil(size/cap)
-    * is n. subBuckets == 1 is the identity. */
+    * md5-salted sub-buckets by amending the key — the batch sub-bucket
+    * salt itself (Dedup.subBucket, which Dedup.capBuckets' salvage tier
+    * uses), so a stream with subBuckets = n pairs exactly like a batch
+    * salvaged bucket whose ceil(size/cap) is n. subBuckets == 1 is the
+    * identity. */
   private def withSubBuckets(banded: DataFrame, subBuckets: Int): DataFrame = {
     require(subBuckets >= 1, s"subBuckets must be >= 1, got $subBuckets")
     if (subBuckets == 1) banded
     else banded.withColumn("key", concat(col("key"), lit(":"),
-      pmod(element_at(
-          graft.functions.md5_words(col("doc_id").cast("string")), 1),
-        lit(subBuckets.toLong)).cast("string")))
+      graft.text.Dedup.subBucket(col("doc_id"), lit(subBuckets.toLong))
+        .cast("string")))
   }
 
   /** SimHash streaming near-dup. pages must carry (idCol: long,
@@ -195,9 +196,10 @@ object NearDupStream {
     val sig = pages.select(col(idCol).as("doc_id"),
         simhash60(col(textCol)).as("sig"), col(tsCol).as("ts"))
       .withWatermark("ts", s"${horizon.toSeconds} seconds")
+    val bits = graft.text.SimHash.Bits
     val banded = withSubBuckets(
       sig.select(col("doc_id"), col("sig"), col("ts"),
-          explode(graft.text.Dedup.simhashBandStructs(col("sig"), numBands))
+          explode(graft.text.Dedup.bitBands(col("sig"), bits, bits / numBands))
             .as("bk"))
         .select(col("bk.band").as("band"),
           col("bk.k0").cast("string").as("key"),
@@ -213,53 +215,29 @@ object NearDupStream {
   }
 
   /** Per-row MinHash band keys of a page relation — streaming-safe
-    * (no groupBy): all of a doc's shingles live in its own text value,
-    * so the per-row array minimum equals the batch groupBy("id").min
-    * over exploded occurrences (Dedup.minhash), hash for hash. Emits
-    * (band, key, doc_id, toks, ts) with key = the band's rowsPerBand
-    * minima joined ':' — the same (band, values) bucket identity as
-    * Dedup.bands, in a form one groupByKey can key on at any
-    * rowsPerBand — and toks = the DISTINCT shingle set (the exact-
+    * (no groupBy): the signature is the batch row kernel's
+    * (Dedup.minhashSigRows over `minhash_sigs`), and the bands are
+    * Dedup.bands' layout, so stream and batch bucket identically, hash
+    * for hash. Emits (band, key, doc_id, toks, ts) with key = the band's
+    * rowsPerBand minima joined ':' — the same (band, values) bucket
+    * identity as Dedup.bands, in a form one groupByKey can key on at
+    * any rowsPerBand — and toks = the DISTINCT shingle set (the exact-
     * Jaccard verify payload; pruned away by candidate-only consumers).
     * Docs too short to have a shingle emit nothing (they have no batch
     * signature row either). */
   def minhashBandKeys(pages: DataFrame, idCol: String, textCol: String,
                       tsCol: String, numHashes: Int = 8,
                       rowsPerBand: Int = 2, k: Int = 3): DataFrame = {
-    require(numHashes % 4 == 0, "numHashes must be a multiple of 4")
-    require(numHashes % rowsPerBand == 0, "rowsPerBand must divide numHashes")
-    val nSalts = numHashes / 4
-    val nBands = numHashes / rowsPerBand
-    val sh = graft.text.TextOps.shingles(col(textCol), k)
-    // one md5 per (DISTINCT shingle, salt) — the same digest economics
-    // as batch minhash, which hashes distinct (id, shingle) pairs
-    // (4 independent 32-bit words per digest); hashing occurrences
-    // would pay the duplication factor of boilerplate text for the
-    // same array_min (min is duplicate-invariant). Two-step select so
-    // array_distinct is computed once, not once per salt column.
-    def salted(s: Int): Column = transform(col("toks"), x =>
-      graft.functions.md5_words(
-        if (s == 0) x else concat(x, lit(s"#$s"))))
-    val withWords = pages
-      .select(col(idCol).as("doc_id"), col(tsCol).as("ts"),
-        array_distinct(sh).as("toks"))
-      .select(
-        (col("doc_id") +: col("ts") +: col("toks") +:
-          (0 until nSalts).map(s => salted(s).as(s"w$s"))): _*)
-    val mins = withWords.select(
-      (col("doc_id") +: col("ts") +: col("toks") +:
-        (0 until numHashes).map(i => array_min(transform(col(s"w${i / 4}"),
-          w => element_at(w, i % 4 + 1))).as(s"m$i"))): _*)
-      .filter(col("m0").isNotNull)
-    val bandCols = (0 until nBands).map { b =>
-      struct(lit(b).as("band"),
-        concat_ws(":", (0 until rowsPerBand)
-          .map(r => col(s"m${b * rowsPerBand + r}")): _*).as("key"))
-    }
-    mins.select(col("doc_id"), col("ts"), col("toks"),
-        explode(array(bandCols: _*)).as("bk"))
-      .select(col("bk.band").as("band"), col("bk.key").as("key"),
-        col("doc_id"), col("toks"), col("ts"))
+    import graft.text.Dedup
+    val sig = Dedup.minhashSigRows(pages,
+      Seq(col(idCol).as("id"), col(tsCol).as("ts"),
+        array_distinct(graft.text.TextOps.shingles(col(textCol), k)).as("toks")),
+      col(textCol), k, numHashes)
+    Dedup.bands(sig, numHashes, rowsPerBand)
+      .select(col("band"),
+        concat_ws(":", (0 until rowsPerBand).map(r => col(s"k$r")): _*)
+          .as("key"),
+        col("id").as("doc_id"), col("toks"), col("ts"))
   }
 
   /** MinHash streaming near-dup CANDIDATES (the streaming twin of
@@ -339,7 +317,7 @@ object NearDupStream {
   /** The banded event stream of an embedding relation (shared by the
     * candidate and verified variants): quantize -> lshSignature (pure
     * expressions, streaming-safe), bands via the SHARED
-    * Ann.lshBandStructs so stream and batch cannot drift. The
+    * Dedup.bitBands so stream and batch cannot drift. The
     * quantized vector rides `sig` (the cosine verify payload; pruned
     * away by candidate-only consumers). */
   private def embedBanded(vecs: DataFrame, idCol: String, vecCol: String,
@@ -358,8 +336,8 @@ object NearDupStream {
           Ann.lshSignature(col("v"), dim, numPlanes).as("hsig"))
         .withWatermark("ts", s"${horizon.toSeconds} seconds")
         .select(col("doc_id"), col("ts"), col("v"),
-          explode(Ann.lshBandStructs(col("hsig"), numPlanes, rowsPerBand))
-            .as("bk"))
+          explode(graft.text.Dedup.bitBands(col("hsig"), numPlanes,
+            rowsPerBand)).as("bk"))
         .select(col("bk.band").as("band"),
           col("bk.k0").cast("string").as("key"),
           col("doc_id"),

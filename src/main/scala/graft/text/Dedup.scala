@@ -69,7 +69,9 @@ object Dedup {
 
   /** LSH band keys: the rowsPerBand signature values as NATIVE long
     * columns (k0, k1, ...) — the bucket self-join then runs on plain
-    * longs, no per-row key-string building. Emits (id, band, k*). */
+    * longs, no per-row key-string building. Emits (id, band, k*) plus
+    * every other non-signature column of `sig` (NearDupStream carries
+    * its event time and verify payload through the same layout). */
   def bands(sig: DataFrame, numHashes: Int = 8,
             rowsPerBand: Int = 2): DataFrame = {
     // fail fast like every sibling banding entry point: rowsPerBand >
@@ -83,69 +85,66 @@ object Dedup {
         .map(r => col(s"m${b * rowsPerBand + r}").as(s"k$r"))): _*)
     }
     val kCols = (0 until rowsPerBand).map(r => col(s"bk.k$r").as(s"k$r"))
-    sig.select(col("id"), explode(array(bandCols: _*)).as("bk"))
-      .select((col("id") +: col("bk.band").as("band") +: kCols): _*)
+    val carried = sig.columns.filterNot(_.matches("m\\d+")).toSeq.map(col)
+    sig.select(carried :+ explode(array(bandCols: _*)).as("bk"): _*)
+      .select((carried ++ (col("bk.band").as("band") +: kCols)): _*)
   }
 
-  /** Drop rows of band buckets holding more than `cap` ids: the bucket
-    * self-join is QUADRATIC in bucket size, so one boilerplate cluster
-    * of 10^6 near-identical pages sharing a band bucket would emit
-    * ~5*10^11 candidate pairs before any verify. The per-bucket count is
-    * a partial-aggregating groupBy (no skewed window), and surviving
-    * rows come back via an equi-join on the same keys. Dropped-bucket
-    * accounting stays queryable: cappedBucketStats reports what a cap
-    * would drop (no silent truncation). */
-  def capBuckets(bandDf: DataFrame, cap: Int): DataFrame = {
-    val keyCols = bandDf.columns.filter(c => c == "band" || c.startsWith("k")).toSeq
-    val small = bandDf.groupBy(keyCols.map(col): _*)
+  /** The join keys of a band relation: `band` and every `k*` column
+    * (the band values, plus the salvage sub-bucket `ksub` when a
+    * policy added it). */
+  private def bucketKeys(bandDf: DataFrame): Seq[String] =
+    bandDf.columns.filter(c => c == "band" || c.startsWith("k")).toSeq
+
+  /** One row per band bucket: its keys and its id count `bucket_n`. */
+  private def bucketSizes(bandDf: DataFrame): DataFrame =
+    bandDf.groupBy(bucketKeys(bandDf).map(col): _*)
       .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") <= cap)
-      .drop("bucket_n")
-    bandDf.join(small, keyCols)
-  }
 
-  /** SALVAGE policy for hot band buckets (the graded alternative to
-    * capBuckets' binary keep/drop): buckets <= `cap` pair fully
-    * (ksub = 0 — identical to the uncapped path); buckets between cap
-    * and cap * `salvageFactor` split into ceil(n/cap) md5-salted
-    * sub-buckets — the sub-bucket id becomes an extra join key, so
-    * pairing runs within sub-buckets only and per-bucket join work
-    * drops from n^2 to ~n*cap while every SAMPLED pair still goes
-    * through the exact verify, i.e. strictly more survivors than
-    * dropping, at identical precision; buckets beyond cap*salvageFactor
-    * still drop entirely (bucketStats keeps the accounting honest).
-    * The sub-bucket hash is the first md5 word of the id's decimal
-    * string (DuckDB-reproducible, h32FromMd parity) and depends only on
-    * (id, bucket size) — deterministic at any parallelism. */
-  def capBucketsSalvage(bandDf: DataFrame, cap: Int,
-                        salvageFactor: Int): DataFrame = {
+  /** The salvage sub-bucket of an id among `n`: the first md5 word of
+    * the id's decimal string, mod n (DuckDB-reproducible, h32FromMd
+    * parity). It depends only on (id, n), so it is deterministic at any
+    * parallelism; NearDupStream's static sub-buckets use it too. */
+  private[graft] def subBucket(id: Column, n: Column): Column =
+    pmod(element_at(graft.functions.md5_words(id.cast("string")), 1), n)
+
+  /** The hot-bucket policy: the bucket self-join is QUADRATIC in
+    * bucket size, so one boilerplate cluster of 10^6 near-identical
+    * pages sharing a band bucket would emit ~5*10^11 candidate pairs
+    * before any verify. Buckets <= `cap` pair fully (ksub = 0 —
+    * identical to the uncapped path); buckets between cap and
+    * cap * `salvageFactor` split into ceil(n/cap) md5-salted
+    * sub-buckets ([[subBucket]] becomes an extra join key, so per-bucket
+    * join work drops from n^2 to ~n*cap while every SAMPLED pair still
+    * goes through the exact verify); larger buckets drop. The default
+    * factor 1 is plain keep/drop: every surviving bucket has n <= cap,
+    * so ksub is always 0. The per-bucket count is a partial-aggregating
+    * groupBy (no skewed window); surviving rows come back via an
+    * equi-join on the same keys. [[bucketStats]] reports what a policy
+    * keeps, salvages and drops (no silent truncation). */
+  def capBuckets(bandDf: DataFrame, cap: Int,
+                 salvageFactor: Int = 1): DataFrame = {
     require(cap >= 1 && salvageFactor >= 1)
-    val keyCols = bandDf.columns.filter(c => c == "band" || c.startsWith("k")).toSeq
-    val counts = bandDf.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("bucket_n"))
+    val counts = bucketSizes(bandDf)
       .filter(col("bucket_n") <= cap.toLong * salvageFactor)
-    val h32 = element_at(
-      graft.functions.md5_words(col("id").cast("string")), 1)
     // ceil(n/cap) via truncating double division — DuckDB's int '/'
     // is DOUBLE too, so CAST(... AS BIGINT) on both sides agrees
     val nsub = ((col("bucket_n") + (cap - 1)) / cap).cast("long")
-    bandDf.join(counts, keyCols)
+    bandDf.join(counts, bucketKeys(bandDf))
       .withColumn("ksub", when(col("bucket_n") <= cap, lit(0L))
-        .otherwise(pmod(h32, nsub)))
+        .otherwise(subBucket(col("id"), nsub)))
       .drop("bucket_n")
   }
 
-  /** Three-tier accounting for the salvage policy — what a given
-    * (cap, salvageFactor) pair would keep whole, salvage via
-    * sub-buckets, and drop (the capBucketsSalvage companion to
-    * bucketStats' keep/drop report; same no-silent-truncation
-    * discipline). */
-  def salvageStats(bandDf: DataFrame, cap: Int,
-                   salvageFactor: Int): DataFrame = {
-    val keyCols = bandDf.columns.filter(c => c == "band" || c.startsWith("k")).toSeq
+  /** Three-tier accounting for [[capBuckets]] at (cap, salvageFactor):
+    * what it keeps whole, salvages via sub-buckets and drops — the
+    * report callers log before committing to a cap. One row:
+    * n_buckets, max_bucket, n_kept_buckets, n_salvaged_buckets,
+    * n_dropped_buckets, n_dropped_rows (factor 1 salvages nothing). */
+  def bucketStats(bandDf: DataFrame, cap: Int,
+                  salvageFactor: Int = 1): DataFrame = {
     val hi = cap.toLong * salvageFactor
-    bandDf.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("bucket_n"))
+    bucketSizes(bandDf)
       .agg(count(lit(1)).as("n_buckets"),
         max(col("bucket_n")).as("max_bucket"),
         sum(when(col("bucket_n") <= cap, 1L).otherwise(0L))
@@ -158,48 +157,53 @@ object Dedup {
           .as("n_dropped_rows"))
   }
 
-  /** Bucket-size distribution over a band relation — the "what would a
-    * cap drop" report callers log before committing to a cap. */
-  def bucketStats(bandDf: DataFrame, cap: Int): DataFrame = {
-    val keyCols = bandDf.columns.filter(c => c == "band" || c.startsWith("k")).toSeq
-    bandDf.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("bucket_n"))
-      .agg(count(lit(1)).as("n_buckets"),
-        max(col("bucket_n")).as("max_bucket"),
-        sum(when(col("bucket_n") > cap, 1L).otherwise(0L)).as("n_dropped_buckets"),
-        sum(when(col("bucket_n") > cap, col("bucket_n")).otherwise(0L))
-          .as("n_dropped_rows"))
-  }
-
   /** The SINGLE bucket-policy dispatch shared by every band family
     * (minhash candidates, simhashPairs, hyperplane bandedCandidates):
-    * None = exact semantics; cap only = keep/drop (capBuckets); cap +
-    * salvageFactor = the three-tier keep/salvage/drop policy
-    * (capBucketsSalvage — the sub-bucket id joins as an extra key via
+    * None = exact semantics; a cap = [[capBuckets]] at `salvageFactor`
+    * (default 1, keep/drop; the sub-bucket id joins as an extra key via
     * the k-prefix convention). salvageFactor without a cap is a
-    * contract error, not a silent no-op. */
+    * contract error, not a silent no-op — raised while the plan builds,
+    * so a declarative task fails at compile time. */
   def applyBucketPolicy(bandDf: DataFrame, maxBucket: Option[Int],
                         salvageFactor: Option[Int]): DataFrame = {
     require(salvageFactor.isEmpty || maxBucket.isDefined,
       "salvageFactor requires maxBucket (the salvage tier refines a cap)")
-    (maxBucket, salvageFactor) match {
-      case (Some(cap), Some(f)) => capBucketsSalvage(bandDf, cap, f)
-      case (Some(cap), None) => capBuckets(bandDf, cap)
-      case (None, _) => bandDf
-    }
+    maxBucket.fold(bandDf)(cap =>
+      capBuckets(bandDf, cap, salvageFactor.getOrElse(1)))
   }
 
-  /** Candidate pairs: ids sharing any band bucket, a < b, distinct.
-    * Bucket policy per [[applyBucketPolicy]]. */
+  /** Candidate pairs: ids sharing any band bucket, a < b, distinct —
+    * the ONE bucket self-join of every band family. Bucket policy per
+    * [[applyBucketPolicy]]. The join keys are `band` and the `k*`
+    * columns; every other column but `id` (a verify payload such as
+    * simhash's `sig`) comes through as `<c>_a`, `<c>_b`. Returns
+    * (id_a, id_b, <c>_a..., <c>_b...). */
   def candidates(bandDf: DataFrame, maxBucket: Option[Int] = None,
                  salvageFactor: Option[Int] = None): DataFrame = {
     val capped = applyBucketPolicy(bandDf, maxBucket, salvageFactor)
-    val keyCols = capped.columns.filter(c => c == "band" || c.startsWith("k"))
+    val keys = bucketKeys(capped)
+    val payload = capped.columns.filterNot(c => c == "id" || keys.contains(c))
     val a = capped.alias("a"); val b = capped.alias("b")
-    val keyEq = keyCols.map(c => col(s"a.$c") === col(s"b.$c")).reduce(_ && _)
+    val keyEq = keys.map(c => col(s"a.$c") === col(s"b.$c")).reduce(_ && _)
     a.join(b, keyEq && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .select((col("a.id").as("id_a") +: col("b.id").as("id_b") +:
+        (payload.map(c => col(s"a.$c").as(s"${c}_a")) ++
+          payload.map(c => col(s"b.$c").as(s"${c}_b")))): _*)
       .distinct()
+  }
+
+  /** The (band, k0) struct array of a bit signature: `totalBits /
+    * bandBits` bands, band n holding bits [n*bandBits, (n+1)*bandBits).
+    * The ONE band splitter of the bit-signature families — simhash (60
+    * bits, 60/numBands a band) and hyperplane LSH (numPlanes bits,
+    * rowsPerBand a band), batch and streaming (NearDupStream keys its
+    * state on the same structs), so no two paths can drift. */
+  def bitBands(sig: Column, totalBits: Int, bandBits: Int): Column = {
+    require(bandBits >= 1 && totalBits % bandBits == 0,
+      s"bandBits=$bandBits must divide totalBits=$totalBits")
+    val mask = (1L << bandBits) - 1L
+    array((0 until totalBits / bandBits).map(n => struct(lit(n).as("band"),
+      shiftright(sig, n * bandBits).bitwiseAND(mask).as("k0"))): _*)
   }
 
   /** Exact Jaccard over distinct shingle sets for given pairs. */
@@ -246,16 +250,14 @@ object Dedup {
                  rowsPerBand: Int = 2, k: Int = 3,
                  maxBucket: Option[Int] = None,
                  salvageFactor: Option[Int] = None): DataFrame = {
-    // docs shorter than k tokens produce an empty signature and drop,
-    // exactly like bands(minhash(docShinglesAll))'s absent row
-    // (bit-identical values, DedupAnnSpec parity)
-    val sig = df.select(col(idCol).as("id"),
-        graft.functions.minhash_sigs(col(textCol), k, numHashes).as("mh"))
-      .filter(size(col("mh")) > 0)
-      .select(col("id") +: (0 until numHashes)
-        .map(i => element_at(col("mh"), i + 1).as(s"m$i")): _*)
-    val bnd = bands(sig, numHashes, rowsPerBand).cache()
-    val cand = candidates(bnd, maxBucket, salvageFactor).cache()
+    val sig = minhashSigRows(df, Seq(col(idCol).as("id")), col(textCol),
+      k, numHashes)
+    // only building `cand` reads the band relation, so it is not cached:
+    // a cache would hold one row per document per band for the whole
+    // query and cost jobs of its own. A cap policy reads it twice, so
+    // the signature kernel runs twice there.
+    val cand = candidates(bands(sig, numHashes, rowsPerBand), maxBucket,
+      salvageFactor).cache()
     // no distinct: a semi-join right side tolerates duplicates, and the
     // distinct would cost one more (tiny but scheduled) shuffle
     val candIds = GatePlans.gate(cand.select(col("id_a").as("id"))
@@ -286,19 +288,20 @@ object Dedup {
       .filter(col("common") > 0 && col("jaccard") >= threshold)
   }
 
-  /** The (band, k0) struct array of a 60-bit signature column — the
-    * SINGLE source of the band layout, shared by the batch pair join
-    * and the streaming state keying (NearDupStream) so the two paths
-    * cannot drift. `numBands` must divide 60; the pigeonhole guarantee
-    * covers Hamming <= numBands - 1. */
-  def simhashBandStructs(sig: Column,
-                         numBands: Int = graft.text.SimHash.NumBands): Column = {
-    require(graft.text.SimHash.Bits % numBands == 0,
-      s"numBands=$numBands must divide ${graft.text.SimHash.Bits}")
-    val bandBits = graft.text.SimHash.Bits / numBands
-    val mask = (1L << bandBits) - 1L
-    array((0 until numBands).map(n => struct(lit(n).as("band"),
-      shiftright(sig, n * bandBits).bitwiseAND(mask).as("k0"))): _*)
+  /** Per-row MinHash signatures: the `keep` columns plus m0..m{n-1}
+    * from the `minhash_sigs` row kernel — the ONE MinHash kernel of the
+    * batch pipeline and of NearDupStream. Rows with fewer than k tokens
+    * have an empty signature and drop, exactly like
+    * bands(minhash(docShinglesAll))'s absent row (bit-identical values,
+    * DedupAnnSpec parity). */
+  private[graft] def minhashSigRows(df: DataFrame, keep: Seq[Column],
+                                    text: Column, k: Int,
+                                    numHashes: Int): DataFrame = {
+    val withSig = df.select(keep :+
+      graft.functions.minhash_sigs(text, k, numHashes).as("mh"): _*)
+    withSig.filter(size(col("mh")) > 0)
+      .select(withSig.columns.filter(_ != "mh").toSeq.map(col) ++
+        (0 until numHashes).map(i => element_at(col("mh"), i + 1).as(s"m$i")): _*)
   }
 
   /** Band count whose pigeonhole guarantee covers `maxHamming` bit
@@ -320,8 +323,9 @@ object Dedup {
     * codegen'd simhash60 expression), band-join on the 4 15-bit bands
     * (Hamming <= 3 over 4 bands guarantees >= 1 identical band —
     * standard pigeonhole blocking), verify exact Hamming.
-    * `maxBucket` caps band-bucket size before the quadratic self-join
-    * (same 100-TB guard as candidates/capBuckets; None = exact). */
+    * Blocking is [[bitBands]] and [[candidates]] with `sig` carried as
+    * the verify payload; `maxBucket`/`salvageFactor` per
+    * [[applyBucketPolicy]] (None = exact). */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
                    maxHamming: Int = 3,
                    maxBucket: Option[Int] = None,
@@ -329,19 +333,10 @@ object Dedup {
     import graft.functions.simhash60
     val numBands = simhashNumBands(maxHamming)
     val sig = df.select(col(idCol).as("id"), simhash60(col(textCol)).as("sig"))
-    val nib0 = sig.select(col("id"), col("sig"),
-        explode(simhashBandStructs(col("sig"), numBands)).as("bk"))
+    val banded = sig.select(col("id"), col("sig"), explode(bitBands(col("sig"),
+        SimHash.Bits, SimHash.Bits / numBands)).as("bk"))
       .select(col("id"), col("sig"), col("bk.band").as("band"), col("bk.k0").as("k0"))
-    val nib = applyBucketPolicy(nib0, maxBucket, salvageFactor)
-    // join keys are whatever the cap policy left: (band, k0) plus the
-    // salvage sub-bucket when present
-    val keyCols = nib.columns.filter(c => c == "band" || c.startsWith("k")).toSeq
-    val a = nib.alias("a"); val b = nib.alias("b")
-    val keyEq = keyCols.map(c => col(s"a.$c") === col(s"b.$c")).reduce(_ && _)
-    a.join(b, keyEq && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        col("a.sig").as("sig_a"), col("b.sig").as("sig_b"))
-      .distinct()
+    candidates(banded, maxBucket, salvageFactor)
       .withColumn("hamming",
         bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast("long"))
       .filter(col("hamming") <= maxHamming)

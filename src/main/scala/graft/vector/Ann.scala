@@ -125,6 +125,25 @@ object Ann {
       .filter(col("cos") >= threshold)
   }
 
+  /** Banded candidate PAIRS (the blocking half of cosineNearDupBanded,
+    * exposed for the streaming parity contract): distinct (id_a, id_b)
+    * sharing >= 1 band bucket, a < b. `corpus` must carry (id, v).
+    * The band splitter (text.Dedup.bitBands, shared with the streaming
+    * twin NearDupStream.embedNearDupCandidates) and the bucket join with
+    * its cap / three-tier salvage policy (text.Dedup.candidates) are
+    * one implementation for every band family (minhash, simhash,
+    * hyperplane). */
+  def bandedCandidates(corpus: DataFrame, dim: Int, numPlanes: Int,
+                       rowsPerBand: Int,
+                       maxBucket: Option[Int] = None,
+                       salvageFactor: Option[Int] = None): DataFrame = {
+    val c = corpus.withColumn("sig", lshSignature(col("v"), dim, numPlanes))
+    val banded = c.select(col("id"), explode(graft.text.Dedup.bitBands(
+        col("sig"), numPlanes, rowsPerBand)).as("bk"))
+      .select(col("id"), col("bk.band").as("band"), col("bk.k0").as("k0"))
+    graft.text.Dedup.candidates(banded, maxBucket, salvageFactor)
+  }
+
   /** Banded embedding near-dup (the MinHash-style r-of-b shape over
     * hyperplane signatures): the numPlanes-bit signature splits into
     * numPlanes/rowsPerBand bands of rowsPerBand bits; candidates share
@@ -133,39 +152,8 @@ object Ann {
     * multi-band OR keeps recall: two vectors only need one agreeing
     * band, not the full signature). Exact cosine verifies candidates,
     * so precision is exact; distinct collapses multi-band duplicates.
-    * `maxBucket` caps band-bucket size before the quadratic self-join
-    * (same 100-TB guard as text Dedup.capBuckets). */
-  /** The (band, k0) struct array of a banded LSH signature — the
-    * SINGLE source of the r-of-b band layout, shared by the batch
-    * banded blocking and the streaming candidate twin
-    * (NearDupStream.embedNearDupCandidates) so the two paths cannot
-    * drift (the simhashBandStructs convention). */
-  def lshBandStructs(sig: Column, numPlanes: Int,
-                     rowsPerBand: Int): Column = {
-    require(numPlanes % rowsPerBand == 0, "numPlanes % rowsPerBand != 0")
-    val nBands = numPlanes / rowsPerBand
-    val mask = (1L << rowsPerBand) - 1L
-    array((0 until nBands).map(bnd => struct(lit(bnd).as("band"),
-      shiftright(sig, bnd * rowsPerBand).bitwiseAND(mask).as("k0"))): _*)
-  }
-
-  /** Banded candidate PAIRS (the blocking half of cosineNearDupBanded,
-    * exposed for the streaming parity contract): distinct (id_a, id_b)
-    * sharing >= 1 band bucket, a < b. `corpus` must carry (id, v).
-    * The bucket join (and the cap / three-tier salvage policy) is
-    * text.Dedup.candidates — one implementation for every band family
-    * (minhash, simhash, hyperplane). */
-  def bandedCandidates(corpus: DataFrame, dim: Int, numPlanes: Int,
-                       rowsPerBand: Int,
-                       maxBucket: Option[Int] = None,
-                       salvageFactor: Option[Int] = None): DataFrame = {
-    val c = corpus.withColumn("sig", lshSignature(col("v"), dim, numPlanes))
-    val banded = c.select(col("id"),
-        explode(lshBandStructs(col("sig"), numPlanes, rowsPerBand)).as("bk"))
-      .select(col("id"), col("bk.band").as("band"), col("bk.k0").as("k0"))
-    graft.text.Dedup.candidates(banded, maxBucket, salvageFactor)
-  }
-
+    * `maxBucket`/`salvageFactor`: the shared bucket policy
+    * (text.Dedup.applyBucketPolicy). */
   def cosineNearDupBanded(corpus: DataFrame, dim: Int, threshold: Double,
                           numPlanes: Int, rowsPerBand: Int,
                           maxBucket: Option[Int] = None,
@@ -202,18 +190,9 @@ object Ann {
     (0 until dim).map(i => centroidWeight(c, i))
   }
 
-  /** Nearest + second-nearest centroid cells of a quantized vector as
-    * one packed int (cid1 << 8 | cid2): score_c = |c|^2 − 2 c·v (the
-    * |v|^2 term is row-constant and drops out of the argmin), ties ->
-    * smaller id. One codegen'd kernel loop per row
-    * (graft.functions.IvfCells) — a least()+CASE Column formulation
-    * re-inlines the 64-literal dot product per branch and trips
-    * janino's 64KB limit into interpreted mode. */
-  def ivfCells(v: Column, dim: Int): Column =
-    graft.functions.ivf_cells(v, dim)
-
-  /** Hard ceiling on codebook size: [[ivfCells]] packs the two nearest
-    * cell ids as `cid1 << 8 | cid2`, so a 257th centroid would overflow
+  /** Hard ceiling on codebook size: the IVF kernel
+    * (graft.functions.ivf_cells_of) packs the two nearest cell ids as
+    * `cid1 << 8 | cid2`, so a 257th centroid would overflow
     * cid2 into cid1's bits and silently corrupt every cell assignment.
     * Enforced at every codebook entry point (build, train, load). */
   val MaxCentroids = 256
@@ -334,9 +313,8 @@ object Ann {
   def ivfTopK(queries: DataFrame, corpus: DataFrame, dim: Int,
               k: Int, codebook: Option[Seq[Seq[Long]]] = None): DataFrame = {
     codebook.foreach(b => requireCentroids(b.size, "ivfTopK codebook"))
-    def packed(v: Column): Column = codebook
-      .map(b => graft.functions.ivf_cells_of(v, b))
-      .getOrElse(ivfCells(v, dim))
+    val book = codebook.getOrElse(lcgCodebook(dim))
+    def packed(v: Column): Column = graft.functions.ivf_cells_of(v, book)
     val c = corpus.withColumn("cid", shiftright(packed(col("v")), 8))
       .withColumn("n2", dotQ(col("v"), col("v")))
     val q = queries.withColumn("packed", packed(col("qv")))

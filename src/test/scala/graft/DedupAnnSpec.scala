@@ -443,21 +443,23 @@ class DedupAnnSpec extends AnyFunSuite with PropHelper {
   }
 
   test("band-bucket cap: generous cap is survivor-identical, cap=1 drops") {
-    def mh(cap: Option[Int]) =
-      Dedup.minhashLsh(docs, "doc_id", "text", 0.4, maxBucket = cap)
-        .select("id_a", "id_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val un = mh(None)
-    assert(mh(Some(100)) == un && un.nonEmpty)
-    // cap 1: every shared bucket has >= 2 ids -> no candidates at all
-    assert(mh(Some(1)).isEmpty)
-    def sh(cap: Option[Int]) =
-      Dedup.simhashPairs(docs, "doc_id", "text", 3, maxBucket = cap)
-        .select("id_a", "id_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val shUn = sh(None)
-    assert(sh(Some(100)) == shUn && shUn.nonEmpty)
-    assert(sh(Some(1)).isEmpty)
+    def mh(cap: Option[Int], sf: Option[Int]) =
+      Dedup.minhashLsh(docs, "doc_id", "text", 0.4, maxBucket = cap,
+        salvageFactor = sf).collect().toSet
+    def sh(cap: Option[Int], sf: Option[Int]) =
+      Dedup.simhashPairs(docs, "doc_id", "text", 3, maxBucket = cap,
+        salvageFactor = sf).collect().toSet
+    for ((pairs, family) <- Seq((mh _, "minhash"), (sh _, "simhash"))) {
+      val un = pairs(None, None)
+      val capped = Seq(1, 2, 100).map(c => c -> pairs(Some(c), None)).toMap
+      assert(capped(100) == un && un.nonEmpty, family)
+      // cap 1: every shared bucket has >= 2 ids -> no candidates at all
+      assert(capped(1).isEmpty, family)
+      // a cap alone is the salvage tier at factor 1: same rows, every column
+      capped.foreach { case (c, rows) =>
+        assert(pairs(Some(c), Some(1)) == rows, s"$family cap $c")
+      }
+    }
     // the drop report is honest: cap=1 reports every shared bucket
     val bnd = Dedup.bands(Dedup.minhash(
       Dedup.docShinglesAll(docs, "doc_id", "text")))
@@ -494,19 +496,24 @@ class DedupAnnSpec extends AnyFunSuite with PropHelper {
     // with cap 2 / factor 8, the n=3 buckets all salvage, nothing drops
     import graft.functions.simhash60
     val nib = trip.select($"doc_id".as("id"), simhash60($"text").as("sig"))
-      .select($"id", explode(Dedup.simhashBandStructs($"sig")).as("bk"))
+      .select($"id", explode(Dedup.bitBands($"sig", 60, 15)).as("bk"))
       .select($"id", $"bk.band".as("band"), $"bk.k0".as("k0"))
-    val st = Dedup.salvageStats(nib, 2, 8).collect()(0)
+    val st = Dedup.bucketStats(nib, 2, 8).collect()(0)
     assert(st.getAs[Long]("n_salvaged_buckets") > 0)
     assert(st.getAs[Long]("n_dropped_buckets") == 0)
     assert(st.getAs[Long]("n_kept_buckets") +
       st.getAs[Long]("n_salvaged_buckets") == st.getAs[Long]("n_buckets"))
-    // factor 1 degenerates to bucketStats' keep/drop split
-    val st1 = Dedup.salvageStats(nib, 2, 1).collect()(0)
-    val bs = Dedup.bucketStats(nib, 2).collect()(0)
-    assert(st1.getAs[Long]("n_dropped_buckets") ==
-      bs.getAs[Long]("n_dropped_buckets"))
+    // factor 1 is the keep/drop split of the bucket sizes counted here
+    val sizes = nib.collect()
+      .groupBy(r => (r.getAs[Int]("band"), r.getAs[Long]("k0")))
+      .values.map(_.length.toLong).toSeq
+    val st1 = Dedup.bucketStats(nib, 2).collect()(0)
+    assert(st1.getAs[Long]("n_buckets") == sizes.size)
+    assert(st1.getAs[Long]("max_bucket") == sizes.max)
+    assert(st1.getAs[Long]("n_kept_buckets") == sizes.count(_ <= 2))
     assert(st1.getAs[Long]("n_salvaged_buckets") == 0)
+    assert(st1.getAs[Long]("n_dropped_buckets") == sizes.count(_ > 2))
+    assert(st1.getAs[Long]("n_dropped_rows") == sizes.filter(_ > 2).sum)
   }
 
   test("minhash salvage recovers pairs the drop policy loses, exactly") {
