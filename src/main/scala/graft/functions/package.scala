@@ -81,12 +81,8 @@ package object functions {
   /** Quantize a float-array column to long (trunc(x * 10000)). */
   def quantize_q(v: Column): Column = toCol(QuantizeQ(toExpr(v)))
 
-  /** Nearest + second-nearest IVF centroid over the LCG codebook,
+  /** Nearest + second-nearest IVF centroid over a centroid matrix,
     * packed (cid1 << 8) | cid2 (one kernel loop; see IvfCellsOf). */
-  def ivf_cells(v: Column, dim: Int): Column =
-    ivf_cells_of(v, graft.vector.Ann.lcgCodebook(dim))
-
-  /** Same, over an explicit (trained) centroid matrix. */
   def ivf_cells_of(v: Column, codebook: Seq[Seq[Long]]): Column =
     toCol(IvfCellsOf(toExpr(v), codebook))
 

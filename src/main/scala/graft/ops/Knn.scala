@@ -44,9 +44,9 @@ import graft.functions._
  * brute-force pass. The count step explodes every query to
  * (2·maxRadius+1)² cells (1,089 at 16), but joins them against the
  * per-cell counts, never against pages; only disk(R) reaches pages.
- * The residue is measured while the plan builds, to size the chunks of
- * its broadcast cross join (GatePlans.broadcastChunks); nothing else
- * runs before the action.
+ * The residue's cross join goes through the broadcast gate, which
+ * always broadcasts it, in as many chunks as the residue's bytes need;
+ * nothing runs before the action.
  */
 object Knn {
 
@@ -86,11 +86,8 @@ object Knn {
 
     val probe = radius.filter(col("R").isNotNull).select(col("qid"), col("qlon"),
       col("qlat"), explode(cell_disk(col("qcell"), col("R"))).as("cell"))
-    // the residue cross join must broadcast the queries (an unhinted
-    // cross join plans as a CartesianProduct that replicates pages), in
-    // as many chunks as its measured bytes need
     val residue = radius.filter(col("R").isNull).select("qid", "qlon", "qlat")
     topkOf(pages.join(GatePlans.gate(probe), Seq("cell")))
-      .unionByName(GatePlans.broadcastChunks(residue, "qid")(qs => topkOf(pages.crossJoin(qs))))
+      .unionByName(topkOf(pages.crossJoin(GatePlans.gate(residue))))
   }
 }

@@ -357,54 +357,44 @@ object Dedup {
                    threshold: Double, k: Int = 3,
                    maxDf: Option[Int] = None): DataFrame = {
     val sh = docShingles(df, idCol, textCol, k).cache()
-    maxDf match {
-      case Some(cap) =>
-        // candidates AND their rare-intersection sizes come from ONE
-        // aggregation over the rare-shingle self-join (no pair-distinct
-        // pass); the hot shingles' contribution to |A∩B| is added back
-        // by joining the (small) hot occurrence rows against the
-        // candidate pairs only — the full-set Jaccard stays exact while
-        // nothing quadratic ever touches a hot shingle
-        val dfRel = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-        // rare/hot split: the occurrences only need a BINARY df <= cap
-        // decision, not the df value — and the hot set (df > cap) is
-        // small by construction wherever the cap is meaningful, so under
-        // the broadcast gate the split is two map-side anti/semi joins
-        // over the cached shingle relation. Over the budget the same
-        // joins run shuffled against the cached hot set (the df
-        // aggregate is computed once either way).
-        val hotShingles = GatePlans.gate(
-          dfRel.filter(col("df") > cap).select("shingle").cache())
-        val rare = sh.join(hotShingles, Seq("shingle"), "left_anti")
-        val hot = sh.join(hotShingles, Seq("shingle"), "left_semi")
-        val a = rare.alias("a"); val b = rare.alias("b")
-        val commonRare = a.join(b, col("a.shingle") === col("b.shingle") &&
-            col("a.id") < col("b.id"))
-          .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
-          .agg(count(lit(1)).as("common_rare"))
-        val commonHot = commonRare.select("id_a", "id_b")
-          .join(hot.select(col("id").as("id_a"), col("shingle")), Seq("id_a"))
-          .join(hot.select(col("id").as("id_b"), col("shingle")),
-            Seq("id_b", "shingle"))
-          .groupBy("id_a", "id_b").agg(count(lit(1)).as("common_hot"))
-        val common = commonRare
-          .join(commonHot, Seq("id_a", "id_b"), "left_outer")
-          .select(col("id_a"), col("id_b"),
-            (col("common_rare") + coalesce(col("common_hot"), lit(0L)))
-              .as("common"))
-        scoreCommon(common, sh, threshold)
-      case None =>
-        // The inverted-index self-join ALREADY enumerates one row per
-        // shared shingle per pair — aggregate it straight into the
-        // intersection size instead of distinct-ing pairs and re-joining
-        // the shingle sets (which would replay |pairs| x |shingles/doc|).
-        val a = sh.alias("a"); val b = sh.alias("b")
-        val common = a.join(b, col("a.shingle") === col("b.shingle") &&
-            col("a.id") < col("b.id"))
-          .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
-          .agg(count(lit(1)).as("common"))
-        scoreCommon(common, sh, threshold)
+    // candidates AND their rare-intersection sizes come from ONE
+    // aggregation over the rare-shingle self-join (no pair-distinct
+    // pass); the hot shingles' contribution to |A∩B| is added back by
+    // joining the (small) hot occurrence rows against the candidate
+    // pairs only — the full-set Jaccard stays exact while nothing
+    // quadratic ever touches a hot shingle.
+    //
+    // rare/hot split: the occurrences only need a BINARY df <= cap
+    // decision, not the df value — and the hot set (df > cap) is small
+    // by construction wherever the cap is meaningful, so under the
+    // broadcast gate the split is two map-side anti/semi joins over the
+    // cached shingle relation. Over the budget the same joins run
+    // shuffled against the cached hot set (the df aggregate is computed
+    // once either way). Uncapped, the hot set is empty: Catalyst folds
+    // the split and the hot-contribution joins away, leaving the one
+    // self-join of every shingle.
+    val hotShingles = maxDf.fold(sh.select("shingle").limit(0)) { cap =>
+      GatePlans.gate(sh.groupBy("shingle").agg(count(lit(1)).as("df"))
+        .filter(col("df") > cap).select("shingle").cache())
     }
+    val rare = sh.join(hotShingles, Seq("shingle"), "left_anti")
+    val hot = sh.join(hotShingles, Seq("shingle"), "left_semi")
+    val a = rare.alias("a"); val b = rare.alias("b")
+    val commonRare = a.join(b, col("a.shingle") === col("b.shingle") &&
+        col("a.id") < col("b.id"))
+      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .agg(count(lit(1)).as("common_rare"))
+    val commonHot = commonRare.select("id_a", "id_b")
+      .join(hot.select(col("id").as("id_a"), col("shingle")), Seq("id_a"))
+      .join(hot.select(col("id").as("id_b"), col("shingle")),
+        Seq("id_b", "shingle"))
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as("common_hot"))
+    val common = commonRare
+      .join(commonHot, Seq("id_a", "id_b"), "left_outer")
+      .select(col("id_a"), col("id_b"),
+        (col("common_rare") + coalesce(col("common_hot"), lit(0L)))
+          .as("common"))
+    scoreCommon(common, sh, threshold)
   }
 
   /** Cluster-keeper output over near-dup pairs — the contract a

@@ -52,22 +52,21 @@ object Ann {
     * candidates per query before any shuffle (the prior global
     * Window.partitionBy(qid) funneled the whole scored corpus of a
     * query into one reducer — a 100x scale-killer). The query side
-    * always broadcasts, in as many xxhash64-modulo chunks as its
-    * measured bytes need (GatePlans.broadcastChunks — its measuring
-    * count runs while the plan is built). Cache lifetime of the query
-    * relation is the CALLER's session (Verify/Bench clearCache between
-    * queries). */
+    * goes through the broadcast gate, which always broadcasts it under
+    * this cross join: in as many xxhash64-modulo chunks as its bytes,
+    * measured when the query runs, need (one chunk within the budget);
+    * the top-k runs over the union of the chunks. Cache lifetime of the
+    * query relation is the CALLER's session (Verify/Bench clearCache
+    * between queries). */
   def cosineTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
     val q = queries.withColumn("qn2", dotQ(col("qv"), col("qv"))).cache()
     val c = corpus.withColumn("n2", dotQ(col("v"), col("v")))
-    GatePlans.broadcastChunks(q, "qid") { qs =>
-      val scored = c.crossJoin(qs)
-        .select(col("qid"), col("id"),
-          cosineFromParts(dotQ(col("qv"), col("v")), col("qn2"), col("n2"))
-            .as("cos"))
-      graft.ops.TopK.perGroup(scored, Seq("qid"), "cos", "id", k,
-        ascending = false)
-    }
+    val scored = c.crossJoin(GatePlans.gate(q))
+      .select(col("qid"), col("id"),
+        cosineFromParts(dotQ(col("qv"), col("v")), col("qn2"), col("n2"))
+          .as("cos"))
+    graft.ops.TopK.perGroup(scored, Seq("qid"), "cos", "id", k,
+      ascending = false)
   }
 
   /** Integer hyperplane weights: LCG of (plane, dim) — single source of

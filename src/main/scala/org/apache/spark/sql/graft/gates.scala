@@ -1,12 +1,13 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo, Literal, Pmod, XxHash64}
+import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
+import org.apache.spark.sql.catalyst.plans.InnerLike
 import org.apache.spark.sql.catalyst.plans.logical.{
   BROADCAST, Filter, HintInfo, Join, JoinHint, LogicalPlan, Project, UnaryNode, Union}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
-import org.apache.spark.sql.functions.{broadcast, col, lit, pmod, xxhash64}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.DataFrame
 
@@ -20,6 +21,9 @@ import org.apache.spark.sql.DataFrame
  * `spark.sql.autoBroadcastJoinThreshold`, Spark's own broadcast budget.
  * Over budget the marker is just removed and the join plans without a
  * hint.
+ *
+ * A cross join must broadcast its gated side whatever it measures, so
+ * there the gate splits the side into budget-sized broadcast chunks.
  *
  * The measurement ([[GatePlans.sizeInBytes]]): when the side reads a
  * cached relation that is not yet loaded, one count materializes it;
@@ -45,12 +49,15 @@ case class BroadcastGate(child: LogicalPlan) extends UnaryNode {
 
 /** Resolves every [[BroadcastGate]] under a [[Join]]: measures the gated
   * side and rewrites the join with a BROADCAST [[JoinHint]] when it
-  * fits, else just removes the marker. Markers are consumed, so the
-  * fixed-point batch converges after one pass. Gates below Project/Filter
-  * wrappers Catalyst may interpose are handled; a gate anywhere else is
-  * stripped without a hint. */
+  * fits, else just removes the marker; a keyless inner join is chunked
+  * instead ([[chunked]]). Markers are consumed, so the fixed-point batch
+  * converges after one pass. Gates below Project/Filter wrappers
+  * Catalyst may interpose are handled; a gate anywhere else is stripped
+  * without a hint. */
 case class ResolveBroadcastGate(session: classic.SparkSession)
     extends Rule[LogicalPlan] {
+
+  private val Broadcast = Some(HintInfo(Some(BROADCAST)))
 
   /** The side with its marker removed, if it carries one; the gated
     * plan under any wrappers is read as [[GatePlans.cachedSide]]. */
@@ -61,15 +68,40 @@ case class ResolveBroadcastGate(session: classic.SparkSession)
     case _ => None
   }
 
+  /** A keyless inner join must broadcast its gated side: unhinted it
+    * plans as a CartesianProduct that replicates the other side. So `j`
+    * takes the side in n = ⌈measured bytes / budget⌉ chunks
+    * `pmod(xxhash64(<side output>), n) = i`, one hinted copy of the join
+    * per chunk, unioned (n = 1 is the plain hinted join). Every row lands
+    * in exactly one chunk, so for an inner join the union is the join. A
+    * non-positive threshold cannot disable this broadcast: chunks are
+    * then sized by Spark's default budget. */
+  private def chunked(j: Join, side: LogicalPlan, gatedLeft: Boolean): LogicalPlan = {
+    val t = session.sessionState.conf.autoBroadcastJoinThreshold
+    val budget = if (t > 0) t else SQLConf.AUTO_BROADCASTJOIN_THRESHOLD.defaultValue.get
+    val n = ((GatePlans.sizeInBytes(session, side) + budget - 1) / budget)
+      .max(1).min(Int.MaxValue).toInt
+    def joinWith(s: LogicalPlan): Join =
+      if (gatedLeft) j.copy(left = s, hint = j.hint.copy(leftHint = Broadcast))
+      else j.copy(right = s, hint = j.hint.copy(rightHint = Broadcast))
+    if (n == 1) joinWith(side)
+    else Union((0 until n).map { i =>
+      joinWith(Filter(EqualTo(Pmod(new XxHash64(side.output), Literal(n.toLong)),
+        Literal(i.toLong)), side))
+    })
+  }
+
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
     case j @ Join(l, r, t, cond, hint) =>
       val ls = strip(l); val rs = strip(r)
       if (ls.isEmpty && rs.isEmpty) j
+      else if (t.isInstanceOf[InnerLike] && ExtractEquiJoinKeys.unapply(j).isEmpty)
+        chunked(j, rs.getOrElse(ls.get), gatedLeft = rs.isEmpty)
       else {
         def side(stripped: Option[LogicalPlan], orig: LogicalPlan,
                  h: Option[HintInfo]): (LogicalPlan, Option[HintInfo]) =
           stripped.map { s =>
-            (s, if (GatePlans.fits(session, s)) Some(HintInfo(Some(BROADCAST))) else h)
+            (s, if (GatePlans.fits(session, s)) Broadcast else h)
           }.getOrElse((orig, h))
         val (nl, lh) = side(ls, l, hint.leftHint)
         val (nr, rh) = side(rs, r, hint.rightHint)
@@ -146,7 +178,7 @@ object GatePlans {
     }
   }
 
-  private def sizeInBytes(s: classic.SparkSession, plan: LogicalPlan): BigInt = {
+  private[graft] def sizeInBytes(s: classic.SparkSession, plan: LogicalPlan): BigInt = {
     // a row count of the side's RDD with every column pruned: one job,
     // no aggregate stage, no column decoded (the cache still loads whole)
     if (unloaded(plan)) classic.Dataset.ofRows(s, Project(Nil, plan)).queryExecution.toRdd.count()
@@ -169,28 +201,6 @@ object GatePlans {
   def fits(df: DataFrame): Boolean = {
     val s = df.sparkSession.asInstanceOf[classic.SparkSession]
     fits(s, optimized(s, df))
-  }
-
-  /** Cross-join loop that must always broadcast `q` (an unhinted cross
-    * join plans as a CartesianProduct that replicates the big side):
-    * `q` splits into ⌈measured bytes / threshold⌉ chunks by
-    * `pmod(xxhash64(key), n)`, each chunk is broadcast into `f`, and the
-    * results are unioned. Every key lands in exactly one chunk, so the
-    * union is a disjoint partition of the one-chunk result. The measuring
-    * count is the one Spark job this costs while the plan is built. A
-    * non-positive threshold (broadcasts disabled) cannot disable a
-    * broadcast these loops need: chunks are then sized by Spark's
-    * default threshold. */
-  def broadcastChunks(q: DataFrame, key: String)
-                     (f: DataFrame => DataFrame): DataFrame = {
-    val s = q.sparkSession.asInstanceOf[classic.SparkSession]
-    val t = s.sessionState.conf.autoBroadcastJoinThreshold
-    val budget = if (t > 0) t else SQLConf.AUTO_BROADCASTJOIN_THRESHOLD.defaultValue.get
-    val n = ((sizeInBytes(q) + budget - 1) / budget).max(1).min(Int.MaxValue).toInt
-    if (n == 1) f(broadcast(q))
-    else (0 until n).map { i =>
-      f(broadcast(q.filter(pmod(xxhash64(col(key)), lit(n)) === i)))
-    }.reduce(_ unionByName _)
   }
 
   /** Deep-nullable view of a schema (`StructType.asNullable` is

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.SparkSessionHelper.{broadcastHints, joins, withBroadcastThreshold}
+import graft.SparkSessionHelper.{broadcastHints, crossJoinChunks, withBroadcastThreshold}
 import graft.text.{Dedup, TextOps}
 import graft.vector.Ann
 
@@ -633,24 +633,30 @@ class DedupAnnSpec extends AnyFunSuite with PropHelper {
 
   test("cosineTopK chunked query loop == broadcast path (exact)") {
     // a 1 KiB budget splits 20 queries into several xxhash64-modulo
-    // chunks; qids partition across chunks, so the union must be
+    // chunks, one broadcast cross join each under one Union; rows
+    // partition across chunks, so the top-k over the union must be
     // row-identical to the single-broadcast plan (the over-budget
     // driver-OOM fallback, VERDICT r3 item 1). A non-positive threshold
     // cannot disable the broadcast the cross join needs: chunks are
-    // sized by Spark's default budget, i.e. one chunk here.
+    // sized by Spark's default budget, i.e. one chunk here. The chunks
+    // are decided when the plan is optimized, so each check optimizes
+    // under its own threshold.
     val q = vecs.select($"id".as("qid"), Ann.quantize($"emb").as("qv"))
     val c = vecs.select($"id", Ann.quantize($"emb").as("v"))
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
       .sortBy(t => (t._1, t._2)).toSeq
     val one = Ann.cosineTopK(q, c, 3)
-    assert(joins(one) == 1)
-    val chunked = withBroadcastThreshold(1024)(Ann.cosineTopK(q, c, 3))
-    assert(joins(chunked) >= 3, s"${joins(chunked)} chunk(s)")
-    assert(rows(chunked) == rows(one))
-    for (t <- Seq(0, -1)) {
-      val df = withBroadcastThreshold(t)(Ann.cosineTopK(q, c, 3))
-      assert(joins(df) == 1, s"threshold $t")
+    assert(crossJoinChunks(one) == Seq(1))
+    withBroadcastThreshold(1024) {
+      val chunked = Ann.cosineTopK(q, c, 3)
+      val chunks = crossJoinChunks(chunked)
+      assert(chunks.size == 1 && chunks.head >= 3, s"chunks $chunks")
+      assert(rows(chunked) == rows(one))
+    }
+    for (t <- Seq(0, -1)) withBroadcastThreshold(t) {
+      val df = Ann.cosineTopK(q, c, 3)
+      assert(crossJoinChunks(df) == Seq(1), s"threshold $t")
       assert(rows(df) == rows(one))
     }
   }
@@ -736,16 +742,15 @@ class DedupAnnSpec extends AnyFunSuite with PropHelper {
     // maxRadius 0 sends every query with fewer than k pages in its own
     // cell to the residue; maxRadius 2 still leaves the far ones there
     for (maxRadius <- Seq(0, 2)) assert(knnRows(pts, pages, 8, 3, maxRadius) == exact)
-    // the residue is the chunked broadcast cross join: a tiny budget
-    // splits it, a non-positive threshold sizes chunks by Spark's default
-    // budget (one chunk); exact either way
-    def crossJoins = knnDf(pts, pages, 8, 3, 0).queryExecution.optimizedPlan.collect {
-      case j: org.apache.spark.sql.catalyst.plans.logical.Join if j.condition.isEmpty => j
-    }.size
-    assert(crossJoins == 1)
+    // the residue is the gated broadcast cross join: a tiny budget
+    // splits it into chunks under one Union, a non-positive threshold
+    // sizes chunks by Spark's default budget (one chunk); exact either way
+    def chunks = crossJoinChunks(knnDf(pts, pages, 8, 3, 0))
+    assert(chunks == Seq(1))
     for ((t, many) <- Seq(64 -> true, 0 -> false, -1 -> false))
       withBroadcastThreshold(t) {
-        assert((crossJoins > 1) == many, s"threshold $t")
+        val c = chunks
+        assert(c.size == 1 && (c.head > 1) == many, s"threshold $t: chunks $c")
         assert(knnRows(pts, pages, 8, 3, 0) == exact, s"threshold $t")
       }
     spark.catalog.clearCache()

@@ -192,10 +192,6 @@ class PlanShapeSpec extends AnyFunSuite {
       "q_dedup_clusters" -> cc,
       "q_dedup_e2e" -> cc,
       "q_clean_corpus" -> cc,
-      "q_knn" -> ("Knn.knnJoin measures its brute-force residue while it " +
-        "builds, to size the chunks of its broadcast cross join"),
-      "q_embed_knn" -> ("cosineTopK measures its query side to size the " +
-        "chunk count of its cross-join loop"),
       "q_overlap_pairing" -> ("the filename pairing checkpoints its " +
         "range-partitioned listing and collects per-partition row counts " +
         "to offset its ranks"))

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join}
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join, LogicalPlan, Union}
 
 /** One shared local session for all Spark-backed suites. */
 object SparkSessionHelper {
@@ -37,8 +37,17 @@ object SparkSessionHelper {
         .count(_.exists(_.strategy.contains(BROADCAST)))
     }.sum
 
-  /** Join nodes in `df`'s optimized plan (one per chunk of a chunked
-    * broadcast loop). */
-  def joins(df: DataFrame): Int =
-    df.queryExecution.optimizedPlan.collect { case j: Join => j }.size
+  /** Chunk count of each gated cross join in `df`'s optimized plan. A
+    * chunk is a BROADCAST-hinted join with no condition; the chunks of
+    * one join are the children of one Union. */
+  def crossJoinChunks(df: DataFrame): Seq[Int] = {
+    def chunk(p: LogicalPlan) = p match {
+      case j: Join => j.condition.isEmpty &&
+        Seq(j.hint.leftHint, j.hint.rightHint).exists(_.exists(_.strategy.contains(BROADCAST)))
+      case _ => false
+    }
+    val plan = df.queryExecution.optimizedPlan
+    val unions = plan.collect { case u: Union if u.children.forall(chunk) => u.children.size }
+    unions ++ Seq.fill(plan.collect { case j if chunk(j) => j }.size - unions.sum)(1)
+  }
 }

@@ -163,6 +163,22 @@ class WorkflowJsonSpec extends AnyFunSuite {
     assert(got == want && got.nonEmpty)
     // the sidecar is the hand-trained codebook exactly
     assert(graft.vector.Ann.loadCodebook(bookPath, Some(64)) == book)
+    // method brute compiles job-free too: the broadcast gate sizes its
+    // cross join's chunks when the query runs
+    val brute =
+      """{"search": {"inp": "embeddings", "operations": {
+        |  "ann_topk": {"id": "vec_id", "vec": "embedding", "dim": 64,
+        |               "k": 3, "method": "brute", "queryMod": 100}}}}""".stripMargin
+    val (bruteDf, bruteJobs) = JobCounter.jobsDuring(spark) {
+      WorkflowJson.compileTask(spark, sfDir, WorkflowJson.parse(brute).get("search"))
+    }
+    assert(bruteJobs == 0, s"ann_topk brute compile launched $bruteJobs Spark job(s)")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sortBy(t => (t._1, t._2)).toSeq
+    val bruteRows = rows(bruteDf)
+    assert(bruteRows == rows(graft.vector.Ann.cosineTopK(queries, corpus, 3)) &&
+      bruteRows.nonEmpty)
+    spark.catalog.clearCache()
   }
 
   test("ann_topk trainIters fails fast pointing at train_codebook") {
