@@ -27,8 +27,8 @@ package graft.cell
  * bit-for-bit, not just statistically.
  *
  * Pure Scala (no Spark imports): unit-testable stand-alone, and callable
- * from generated code (Catalyst doGenCode emits static calls into this
- * object — same pattern as Spark's own RegExpExtract kernels).
+ * from generated code (each cell kernel is a static call into this
+ * object, bound by graft.functions.Kernel through Spark's StaticInvoke).
  */
 object CellIndex {
   val MaxRes = 26

@@ -140,7 +140,7 @@ object Oracle {
     }
 
   /** numpy-float32 normalized difference, scaled x1000 and truncated
-    * toward zero (NormDiff + Indexes.scaled parity). `a`/`b` must be
+    * toward zero (norm_diff kernel + Indexes.scaled parity). `a`/`b` must be
     * REAL-typed SQL expressions. DuckDB's float 0/0 yields NULL (not
     * NaN) — coalesce maps it to the kernel's NaN->0. */
   def normDiffSql(a: String, b: String): String =

@@ -110,7 +110,7 @@ object Pages {
     val meta = footer.getFileMetaData
     val stored = Option(
       meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
-    org.apache.spark.sql.graft.GatePlans.asNullable(
+    org.apache.spark.sql.graft.Bridge.asNullable(
       stored.map(j => DataType.fromJson(j).asInstanceOf[StructType])
         .getOrElse {
           new org.apache.spark.sql.execution.datasources.parquet

@@ -250,12 +250,14 @@ object Dedup {
                  rowsPerBand: Int = 2, k: Int = 3,
                  maxBucket: Option[Int] = None,
                  salvageFactor: Option[Int] = None): DataFrame = {
-    val sig = minhashSigRows(df, Seq(col(idCol).as("id")), col(textCol),
+    val rows = minhashSigRows(df, Seq(col(idCol).as("id")), col(textCol),
       k, numHashes)
-    // only building `cand` reads the band relation, so it is not cached:
-    // a cache would hold one row per document per band for the whole
-    // query and cost jobs of its own. A cap policy reads it twice, so
-    // the signature kernel runs twice there.
+    // a cap policy reads the band relation twice (the bucket count and
+    // the join back), so there the signature rows are cached and the
+    // kernel runs once; caller-owned lifetime, as for `cand`. Uncapped,
+    // only building `cand` reads them, and a cache would cost memory
+    // for the whole query and jobs of its own.
+    val sig = if (maxBucket.isDefined) rows.cache() else rows
     val cand = candidates(bands(sig, numHashes, rowsPerBand), maxBucket,
       salvageFactor).cache()
     // no distinct: a semi-join right side tolerates duplicates, and the

@@ -24,11 +24,11 @@ import org.apache.spark.sql.graft.GatePlans
 object Ann {
 
   /** Quantize a float array column to Long (trunc toward zero) — one
-    * codegen'd loop per row (QuantizeQ kernel). */
+    * codegen'd loop per row (the quantize_q kernel). */
   def quantize(v: Column): Column = graft.functions.quantize_q(v)
 
   /** Exact integer dot product of two quantized vectors — the codegen'd
-    * DotQ kernel (one tight loop/row; the zip_with+aggregate HOF pair
+    * dot_q kernel (one tight loop/row; the zip_with+aggregate HOF pair
     * evaluates interpreted per element). */
   def dotQ(a: Column, b: Column): Column = graft.functions.dot_q(a, b)
 

@@ -202,11 +202,4 @@ object GatePlans {
     val s = df.sparkSession.asInstanceOf[classic.SparkSession]
     fits(s, optimized(s, df))
   }
-
-  /** Deep-nullable view of a schema (`StructType.asNullable` is
-    * `private[spark]`): file-source inference reports every column
-    * nullable, so the driver-side footer schema must match it exactly
-    * or plans would differ from the inference path. */
-  def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
-    s.asNullable
 }

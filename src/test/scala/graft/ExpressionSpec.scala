@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 
 import graft.cell.CellIndex
 import graft.geo.{GeoTag, Polygon}
@@ -9,8 +11,9 @@ import graft.functions._
 
 /**
  * Codegen-path parity: every Catalyst expression evaluated THROUGH SPARK
- * (whole-stage codegen) must equal the pure kernel called directly.
- * Catches doGenCode bugs that nullSafeEval-only tests would miss.
+ * (whole-stage codegen) must equal the pure kernel called directly, and
+ * interpreted evaluation (the reflective path of `StaticInvoke`) must
+ * equal generated code. Catches bugs that one path alone would miss.
  */
 class ExpressionSpec extends AnyFunSuite {
   lazy val spark = SparkSessionHelper.spark
@@ -142,13 +145,93 @@ class ExpressionSpec extends AnyFunSuite {
     }
   }
 
+  /** Every kernel in one projection over a generated (non-local)
+    * relation, so it runs as a real plan; every 17th row is null. */
+  def everyKernel = {
+    val blank = $"id" % 17 === 3
+    val in = spark.range(0, 300, 1, 3).select($"id",
+      when(!blank, ($"id" * 37 % 3599 / 10.0 - 179.95)).as("lon"),
+      ($"id" * 53 % 1799 / 10.0 - 89.95).as("lat"),
+      when(!blank, concat(lit("https://h"), $"id", lit(".example."),
+        when($"id" % 3 === 0, "de").otherwise("zz"), lit("/p"))).as("url"),
+      when(!blank, concat_ws(" ", lit("the"), ($"id" % 7).cast("string"),
+        lit("und der fox"), ($"id" % 5).cast("string"), lit("la"))).as("text"),
+      array(($"id" % 13 / 7.0).cast("float"), (-$"id" % 5 / 3.0).cast("float"),
+        lit(0.25f)).as("fv"),
+      ($"id" % 11).cast("float").as("a"), ($"id" % 7 - 3).cast("float").as("b"))
+    val cell = cell_of($"lon", $"lat", 10)
+    val q = quantize_q($"fv")
+    in.select($"id", geotag_lon($"url"), geotag_lat($"url"), geotag_cell($"url", 12),
+      cell, cell_parent(cell, 3), cell_children(cell), cell_disk(cell, 1),
+      cell_disk(cell, ($"id" % 3).cast("int")), cell_ring(cell, 2),
+      cell_center_lon(cell), cell_center_lat(cell), cell_x(cell), cell_y(cell),
+      simhash60($"text"), q, dot_q(q, q), shingles_k($"text", 2),
+      minhash_sigs($"text", 3, 8), md5_words($"text"), lang_scores($"text"),
+      doc_fingerprint($"text"), norm_diff($"a", $"b"),
+      cell_in_ranges(cell, CellIndex.coverRanges(
+        CellIndex.coverRect(0.0, 0.0, 90.0, 60.0, 6), 10)),
+      point_in_poly($"lon", $"lat", Polygon.registry("asia_l")),
+      ivf_cells_of(q, graft.vector.Ann.lcgCodebook(3)))
+  }
+
+  test("every kernel: interpreted evaluation == whole-stage codegen") {
+    val codegen = everyKernel.orderBy("id").collect().toSeq
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    val prev = keys.map(k => spark.conf.getOption(k))
+    spark.conf.set(keys(0), "false")
+    spark.conf.set(keys(1), "NO_CODEGEN")
+    val interpreted = try {
+      val df = everyKernel.orderBy("id")
+      assert(!df.queryExecution.executedPlan.toString.contains("*("))
+      df.collect().toSeq
+    } finally keys.zip(prev).foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    assert(codegen.size == 300 && codegen.count(_.isNullAt(4)) == 18)
+    assert(interpreted == codegen)
+    codegen.filterNot(_.isNullAt(4)).take(20).foreach { r =>
+      val id = r.getLong(0)
+      val text = s"the ${id % 7} und der fox ${id % 5} la"
+      assert(r.getLong(5) == CellIndex.parent(r.getLong(4), 3))
+      assert(r.getLong(14) == graft.text.SimHash.sig60(text))
+      assert(r.getLong(21) == graft.text.TextKernels.fingerprint(
+        org.apache.spark.unsafe.types.UTF8String.fromString(text)))
+    }
+  }
+
   test("plan stays in whole-stage codegen (no UDF fallback)") {
-    val df = spark.range(1000)
-      .select(($"id" % 360 - 180).cast("double").as("lon"),
-        ($"id" % 180 - 90).cast("double").as("lat"))
-    val plan = df.select(cell_of($"lon", $"lat", 12))
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("*(1) Project")) // '*' = inside WholeStageCodegen
-    assert(!plan.contains("BatchEvalPython") && !plan.contains("ScalaUDF"))
+    val plan = everyKernel.queryExecution.executedPlan
+    val text = plan.toString
+    // '*' = inside WholeStageCodegen; every projection is in one
+    assert(text.contains("*(1) Project"))
+    assert(text.linesIterator.filter(_.contains("Project")).forall(_.contains("*(")))
+    assert(!text.contains("BatchEvalPython") && !text.contains("ScalaUDF"))
+    // the generated source compiles (a failure would fall back to
+    // interpreted evaluation at run time) and calls each kernel directly
+    val code = plan.collect { case w: WholeStageCodegenExec => w.doCodeGen()._2 }
+    code.foreach(CodeGenerator.compile)
+    val body = code.map(_.body).mkString
+    Seq("graft.cell.CellIndex.parent(", "graft.functions.kernels.normDiff(",
+      "graft.text.TextKernels.minhashSigs(", "graft.functions.kernels.geotagCell(")
+      .foreach(call => assert(body.contains(call), call))
+  }
+
+  test("SQL surface: the registered names, type checks and column names") {
+    val s = spark.newSession()
+    def names = s.catalog.listFunctions().collect().map(_.name).toSet
+    val builtin = names
+    registerAll(s)
+    assert(names -- builtin == Set("geotag_lon", "geotag_lat", "geotag_cell", "cell_of", "cell_parent",
+      "cell_children", "cell_disk", "cell_ring", "cell_center_lon", "cell_center_lat",
+      "cell_x", "cell_y", "norm_diff", "simhash60", "shingles_k", "md5_words",
+      "doc_fingerprint", "lang_scores", "dot_q", "quantize_q", "ivf_cells"))
+    val err = intercept[org.apache.spark.sql.AnalysisException](
+      s.sql("SELECT cell_parent('x', 1)").queryExecution.assertAnalyzed())
+    assert(err.getCondition == "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE", err.getMessage)
+    assert(s.sql("SELECT cell_parent(id, 1), norm_diff(1.0F, 2.0F) FROM range(1)")
+      .columns.toSeq == Seq("cell_parent(id, 1)", "norm_diff(1.0, 2.0)"))
+    assert(s.range(1).select(cell_parent($"id", 2), geotag_cell($"id".cast("string"), 12))
+      .columns.toSeq == Seq("cell_parent(id, 2)", "geotag_cell(CAST(id AS STRING), 12)"))
   }
 }

@@ -17,7 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
  *    brute-force residue is under 1 KiB at this scale, and DedupAnnSpec
  *    splits it under a smaller budget).
  * A per-query digest that ignores row order is compared against the
- * default config's.
+ * default config's. The oracle tables hold no tie at any top-k
+ * boundary, so a planted-tie case pins the `(score, id)` top-k order
+ * under the same configs.
  */
 class InvarianceSpec extends AnyFunSuite {
   lazy val spark = SparkSessionHelper.spark
@@ -74,6 +76,51 @@ class InvarianceSpec extends AnyFunSuite {
         SparkEntry.queries("q_embed_knn")(spark, sfDir))
       spark.catalog.clearCache()
       assert(chunks.size == 1 && chunks.head > 1, s"q_embed_knn chunks $chunks")
+    }
+  }
+
+  test("top-k ties at the k boundary break toward the smaller id under every config") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val k = 4
+    // each distinct value is held by 3 ids in shuffled input order, so
+    // the k-th rank always falls inside a planted tie
+    def planted[T](n: Int, value: Int => T): Seq[(Long, T)] = {
+      val values = (0 until n).map(value)
+      rnd.shuffle((0 until 3 * n).toList).map(i => (i.toLong, values(i % n)))
+    }
+    def topK(scored: Seq[(Long, Long, Double)], descending: Boolean) =
+      scored.groupBy(_._1).toSeq.flatMap { case (qid, rows) =>
+        rows.sortBy { case (_, id, s) => (if (descending) -s else s, id) }.take(k)
+          .zipWithIndex.map { case ((_, id, s), r) => (qid, r + 1L, id, s) }
+      }.toSet
+
+    def randVec() = Seq.fill(6)(rnd.nextInt(2001) - 1000L)
+    val corpus = planted(20, _ => randVec())
+    val queries = Seq.tabulate(5)(q => (q.toLong, randVec()))
+    def dot(a: Seq[Long], b: Seq[Long]) = a.zip(b).map { case (x, y) => x * y }.sum
+    val annWant = topK(for ((qid, qv) <- queries; (id, v) <- corpus) yield (qid, id,
+      dot(qv, v).toDouble / (math.sqrt(dot(qv, qv).toDouble) * math.sqrt(dot(v, v).toDouble))),
+      descending = true)
+
+    val res = 8
+    val pages = planted(30, _ => (30.0 + rnd.nextInt(400) / 100.0, 10.0 + rnd.nextInt(400) / 100.0))
+      .map { case (id, (lon, lat)) => (id, lon, lat) }
+    val points = Seq.tabulate(6)(q => (q.toLong, 30.5 + q * 0.5, 10.5 + q * 0.4))
+    val knnWant = topK(for ((qid, qlon, qlat) <- points; (id, lon, lat) <- pages) yield (qid, id,
+      (lon - qlon) * (lon - qlon) + (lat - qlat) * (lat - qlat)), descending = false)
+
+    def rows(df: DataFrame, score: String) = df.collect().map(r => (r.getAs[Long]("qid"),
+      r.getAs[Number]("rank").longValue, r.getAs[Long]("id"), r.getAs[Double](score))).toSet
+    for ((label, conf) <- ("default" -> Map.empty[String, String]) +: configs) withConf(conf) {
+      val ann = graft.vector.Ann.cosineTopK(queries.toDF("qid", "qv").repartition(3),
+        corpus.toDF("id", "v").repartition(7), k)
+      assert(rows(ann, "cos") == annWant, s"cosineTopK under [$label]")
+      val pg = pages.toDF("id", "lon", "lat").repartition(7)
+        .withColumn("cell", graft.functions.cell_of(col("lon"), col("lat"), res))
+      val knn = graft.ops.Knn.knnJoin(points.toDF("qid", "qlon", "qlat"), pg, res, k)
+      assert(rows(knn, "dist2") == knnWant, s"knnJoin under [$label]")
+      spark.catalog.clearCache()
     }
   }
 }

@@ -168,6 +168,41 @@ class PlanShapeSpec extends AnyFunSuite {
         s"set relation not broadcast into the $side pair join:\n$p")
   }
 
+  test("capped minhash runs the signature kernel in one pass") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.functions.col
+    // operators of the executed plans evaluating minhash_sigs: each
+    // cached plan counts once however many scans read it, and a reused
+    // exchange is a leaf. The cap policy reads the band relation twice
+    // (bucket count and join back), yet the kernel must run as often as
+    // in one pass over the corpus.
+    def passes(df: DataFrame): Int = {
+      val seen = scala.collection.mutable.Set[AnyRef]()
+      def count(p: SparkPlan): Int = p match {
+        case a: AdaptiveSparkPlanExec => count(a.executedPlan)
+        case s: QueryStageExec => count(s.plan)
+        case s: InMemoryTableScanExec =>
+          if (seen.add(s.relation.cacheBuilder)) count(s.relation.cachedPlan) else 0
+        case n => n.expressions.count(_.exists {
+          case i: StaticInvoke => i.functionName == "minhashSigs"
+          case _ => false
+        }) + n.children.map(count).sum
+      }
+      df.collect()
+      try count(df.queryExecution.executedPlan) finally spark.catalog.clearCache()
+    }
+    val onePass = passes(graft.text.Dedup.minhashSigRows(
+      graft.sources.Corpus.withDups(spark, sfDir), Seq(col("doc_id").as("id")),
+      col("text"), 3, 8))
+    assert(onePass > 0)
+    for (q <- Seq("q_minhash_capped", "q_minhash_salvaged"))
+      assert(passes(SparkEntry.queries(q)(spark, sfDir)) == onePass, q)
+  }
+
   test("semi-points cell fallback: equi-join candidates, no cross product") {
     val p = plan("q_semi_points_cells")
     assert(!p.contains("BroadcastNestedLoop") && !p.contains("CartesianProduct"),
